@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 from luxo_rs_spark.functions.fnv1a import fnv1a64_col
 from luxo_rs_spark.functions.spread import spread
 from luxo_rs_spark.functions.text import words
+from luxo_rs_spark.sources.registry import local_frame
 
 #: 2^64 as a decimal literal — for reinterpreting the signed fnv1a64
 #: LongType output as its unsigned value (SURVEY.md §7 u64 note)
@@ -401,8 +402,8 @@ def mixture_weights(
     Returns (domain, n_docs, actual_frac, target_frac, factor).
     """
     spark = df.sparkSession
-    tgt = spark.createDataFrame(
-        [(k, float(v)) for k, v in targets.items()],
+    tgt = local_frame(
+        spark, [(k, float(v)) for k, v in targets.items()],
         f"{by} string, target_frac double",
     )
     counts = df.groupBy(by).agg(F.count(F.lit(1)).alias("n_docs"))

@@ -41,6 +41,7 @@ from pyspark.sql.window import Window
 
 from luxo_rs_spark.functions.spread import spread
 from luxo_rs_spark.functions.vectors import cosine, dot, norm
+from luxo_rs_spark.sources.registry import local_frame
 
 
 def cosine_topk(
@@ -754,7 +755,7 @@ def ivf_adc_topk(
         .select(id_col)
     )
     # exact re-rank: fetch full-precision vectors for the shortlist only
-    qdf = spark.createDataFrame([(q.tolist(),)], "__q array<double>")
+    qdf = local_frame(spark, [(q.tolist(),)], "__q array<double>")
     return (
         emb.join(F.broadcast(short), id_col)
         .crossJoin(F.broadcast(qdf))
@@ -1119,7 +1120,8 @@ def write_ivf_adc_index(
         .partitionBy("ivf_cluster")
         .parquet(path)
     )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(float(lo), float(hi), n_codes)], "lo double, hi double, n_codes int"
     ).coalesce(1).write.mode("overwrite").parquet(path + "/_adc_meta")
 
@@ -1474,14 +1476,16 @@ def write_ivf_pq_index(
         .parquet(path)
     )
     m, k, _dsub = codebooks.shape
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [
             (int(c), [float(v) for v in centroids[c]])
             for c in range(len(centroids))
         ],
         "cluster int, center array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(path + "/_ivf_centroids")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [
             (j, e, [float(v) for v in codebooks[j][e]])
             for j in range(m)
@@ -1493,7 +1497,8 @@ def write_ivf_pq_index(
         # the OPQ rotation lives beside the codebooks: probes rotate
         # the query residual once; appenders encode against the same
         # frozen frame (append == rebuild still holds)
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (i, [float(v) for v in rotation[i]])
                 for i in range(rotation.shape[0])
@@ -1608,8 +1613,8 @@ def ivf_pq_pruned_probe(
         )
         for c in probes
     ]
-    tab_df = spark.createDataFrame(
-        tab_rows, "ivf_cluster int, __tab array<array<double>>"
+    tab_df = local_frame(
+        spark, tab_rows, "ivf_cluster int, __tab array<array<double>>"
     )
     codes_scan = (
         spark.read.parquet(index_path)

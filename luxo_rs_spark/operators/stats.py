@@ -136,8 +136,10 @@ def exact_percentiles(
     vals = spread(vals, "__k")
 
     hist = vals.groupBy("__b").agg(F.count(F.lit(1)).alias("__c"))
-    # window over BUCKET rows: bounded by value range >> bucket_shift
-    # (never by row count) — the SCALING.md pre-agg window pattern
+    # one global window over BUCKET rows (the SCALING.md pre-agg window
+    # pattern): bounded by value range >> bucket_shift for integer and
+    # decimal keys; doubles spread over many magnitudes can put every
+    # row in its own bucket, so there it grows with row count
     w_cum = Window.orderBy("__b").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -187,8 +189,10 @@ def exact_percentiles(
     # rows are COLLAPSED to per-key counts by a distributed aggregation
     # FIRST (map-side partial agg — no task ever holds a bucket's row
     # population), so the rank window that follows runs over DISTINCT
-    # keys within one bucket — bounded by the bucket width (2^shift)
-    # for integer/decimal keys, never by row count. Previously a
+    # keys within one bucket — at most 2^shift for integer/decimal
+    # keys; a double bucket holds any number of distinct doubles, so a
+    # hot narrow-range double column still gives one large window
+    # partition. Previously a
     # row_number window ranked the raw rows, whose partition grew
     # linearly with data (a hot price bucket at 100 TB = one straggler
     # task). The key containing local rank r is the one whose

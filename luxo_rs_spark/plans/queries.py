@@ -30,7 +30,9 @@ from pyspark.sql.window import Window
 
 from luxo_rs_spark.operators.asof import asof_join
 from luxo_rs_spark.operators.topk import top_k, top_k_per_group
-from luxo_rs_spark.sources.registry import load_table, table_num_rows
+from luxo_rs_spark.sources.registry import (
+    load_table, local_frame, table_num_rows,
+)
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
@@ -228,8 +230,8 @@ def q04_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("q05_range_join")
 def q05_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
-    buckets = spark.createDataFrame(
-        [("small", 1, 17), ("medium", 17, 34), ("large", 34, 51)],
+    buckets = local_frame(
+        spark, [("small", 1, 17), ("medium", 17, 34), ("large", 34, 51)],
         "bucket_name string, lo int, hi int",
     )
     return (
@@ -12890,7 +12892,8 @@ NO_ORACLE.add("q363_tdigest_rollup")
 # ---------------------------------------------------------------------------
 @query("q364_lsh_calibration")
 def q364_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configs = spark.createDataFrame(
+    configs = local_frame(
+        spark,
         [(8, 16), (16, 8), (32, 4), (64, 2)], "bands int, rows_per_band int"
     )
     grid = configs.select(
@@ -14548,7 +14551,8 @@ def q403_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kept.write.format("noop").mode("overwrite").save()  # one real pass
     m = {**gate_in.get, **gate_out.get}
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(m["rows_in"]),
@@ -14682,7 +14686,8 @@ def q406_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-host robots rules (what parse of each host's robots.txt
     # would yield): disallow /docs/private, re-allow /docs/private/ok,
     # and src0 additionally disallows everything under /docs
-    rules = spark.createDataFrame(
+    rules = local_frame(
+        spark,
         [
             ("*", "disallow", "/docs/private"),
             ("*", "allow", "/docs/private/ok"),
@@ -14782,8 +14787,8 @@ def q407_robots_wildcards(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("")),
         ).alias("path"),
     )
-    rules = spark.createDataFrame(
-        compile_rules(_Q407_RULES),
+    rules = local_frame(
+        spark, compile_rules(_Q407_RULES),
         "rhost string, verdict string, like_pat string, spec int",
     )
     hosts = urls.select(F.col("host").alias("h")).distinct()
@@ -15061,8 +15066,8 @@ def q410_robots_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("")),
         ).alias("path"),
     )
-    rules = spark.createDataFrame(
-        _q410_rules(),
+    rules = local_frame(
+        spark, _q410_rules(),
         "rhost string, verdict string, like_pat string, spec int",
     )
     hosts = urls.select(F.col("host").alias("h")).distinct()
@@ -18177,8 +18182,8 @@ def q476_delta_log_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             int(sagg["c"]),
         )
     )
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "probe string, files_total int, files_scanned int, "
         "n_rows bigint, sum_cents bigint",
     ).orderBy("probe")
@@ -18390,8 +18395,8 @@ def q479_delta_v3_dv_column_mapping(
             0,
         )
     )
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "probe string, files_total int, files_scanned int, "
         "n_rows bigint, sum_cents bigint, dv_rows bigint",
     ).orderBy("probe")
@@ -18466,8 +18471,8 @@ def q480_snaptable_conditional_merge(
             (f"v{v}", int(agg["n"]), int(agg["c"]), int(agg["u"]),
              int(agg["i"]))
         )
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "probe string, n_rows bigint, sum_cents bigint, "
         "n_updated bigint, n_inserted bigint",
     ).orderBy("probe")
@@ -18534,8 +18539,8 @@ def q481_iceberg_v2_lifecycle(
             int(sagg["c"]),
         )
     )
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "probe string, files_total int, files_scanned int, "
         "n_rows bigint, sum_cents bigint",
     ).orderBy("probe")
@@ -18607,8 +18612,8 @@ def q482_snaptable_selective_optimize(
         )
         for name, df, info in probes
     ]
-    head = spark.createDataFrame(
-        [("0_carried", carried, 0, 0, 0, 0)],
+    head = local_frame(
+        spark, [("0_carried", carried, 0, 0, 0, 0)],
         "probe string, files_total int, files_scanned int, "
         "rows_skipped bigint, n_rows bigint, sum_cents bigint",
     )
@@ -18665,8 +18670,8 @@ def q483_iceberg_position_deletes(
             F.sum("cents").cast("bigint").alias("c"),
         ).first()
         rows.append((f"s{sid}", int(agg["n"]), int(agg["c"])))
-    return spark.createDataFrame(
-        rows, "probe string, n_rows bigint, sum_cents bigint"
+    return local_frame(
+        spark, rows, "probe string, n_rows bigint, sum_cents bigint"
     ).orderBy("probe")
 
 
@@ -18735,8 +18740,8 @@ def q484_dedup_dv_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).first()
         rows.append((f"v{v}", int(agg["n"]), int(agg["s"])))
     rows.append(("dv_accounting", files_with_dv, dv_rows))
-    return spark.createDataFrame(
-        rows, "probe string, a bigint, b bigint"
+    return local_frame(
+        spark, rows, "probe string, a bigint, b bigint"
     ).orderBy("probe")
 
 
@@ -18838,8 +18843,8 @@ def q486_cross_format_migration(
             int(a["c"]),
         )
     )
-    return spark.createDataFrame(
-        rows, "probe string, n_rows bigint, sum_cents bigint"
+    return local_frame(
+        spark, rows, "probe string, n_rows bigint, sum_cents bigint"
     ).orderBy("probe")
 
 

@@ -69,6 +69,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from luxo_rs_spark.sources.footer import footer_stats
+from luxo_rs_spark.sources.registry import local_frame
+
 _LOG_DIR = "_delta_log"
 _SEQ = itertools.count()
 
@@ -725,7 +728,7 @@ class DeltaLog:
         pcols = s["partition_columns"]
         phys_of = self._phys_of(s)
         if not adds:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         data_fields = [f for f in schema.fields if f.name not in pcols]
         data_names = [f.name for f in data_fields]
 
@@ -773,7 +776,8 @@ class DeltaLog:
             ]
             part = self.spark.read.schema(phys_schema).parquet(*paths)
             if any_dv and dv_pairs:
-                dvdf = self.spark.createDataFrame(
+                dvdf = local_frame(
+                    self.spark,
                     dv_pairs, "__dl_fname__ string, __dl_pos__ bigint"
                 )
                 part = (
@@ -882,8 +886,6 @@ class DeltaLog:
         paths, sizes, spec-string partitionValues, stats)."""
         import shutil
 
-        import pyarrow.parquet as pq
-
         stage = os.path.join(self.root, f"_stage_{os.getpid():x}")
         if partition_by:
             (
@@ -922,28 +924,15 @@ class DeltaLog:
                 dst = os.path.join(self.root, rel)
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 os.replace(src, dst)
-                md = pq.ParquetFile(dst)
-                stats = {"numRecords": md.metadata.num_rows}
-                mins: dict = {}
-                maxs: dict = {}
-                names = list(md.metadata.schema.names)
-                for col in stat_cols:
-                    if col not in names:
-                        continue
-                    ci = names.index(col)
-                    mn = mx = None
-                    for rg in range(md.metadata.num_row_groups):
-                        st = md.metadata.row_group(rg).column(ci).statistics
-                        if st is None or not st.has_min_max:
-                            mn = mx = None
-                            break
-                        mn = st.min if mn is None else min(mn, st.min)
-                        mx = st.max if mx is None else max(mx, st.max)
-                    if mn is not None:
-                        mins[col] = mn
-                        maxs[col] = mx
-                stats["minValues"] = mins
-                stats["maxValues"] = maxs
+                n_rows, folded = footer_stats(dst, stat_cols)
+                mins, maxs, nulls = {}, {}, {}
+                for c, st in folded.items():
+                    if st["min"] is not None:
+                        mins[c], maxs[c] = st["min"], st["max"]
+                    if st["nulls"] is not None:
+                        nulls[c] = st["nulls"]
+                stats = {"numRecords": n_rows, "minValues": mins,
+                         "maxValues": maxs, "nullCount": nulls}
                 adds.append(
                     {
                         "path": rel,
@@ -1524,8 +1513,8 @@ class DeltaLog:
                     a["txn"]["appId"] for a in acts if "txn" in a
                 ),
             ))
-        return self.spark.createDataFrame(
-            rows,
+        return local_frame(
+            self.spark, rows,
             "version int, operation string, n_adds int, "
             "n_data_adds int, n_removes int, n_data_removes int, "
             "txn_apps array<string>",

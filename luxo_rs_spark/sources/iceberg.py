@@ -60,6 +60,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from luxo_rs_spark.sources.avro_io import read_avro, write_avro
+from luxo_rs_spark.sources.footer import footer_stats
+from luxo_rs_spark.sources.registry import local_frame
 
 
 class IcebergProtocolError(RuntimeError):
@@ -202,6 +204,10 @@ def _manifest_schema(partition_fields: list[dict]) -> dict:
             {"name": "partition", "type": part},
             {"name": "record_count", "type": "long"},
             {"name": "file_size_in_bytes", "type": "long"},
+            {
+                "name": "null_value_counts",
+                "type": ["null", _kv_array("k121_v122", "long")],
+            },
             {
                 "name": "lower_bounds",
                 "type": ["null", _kv_array("k126_v127")],
@@ -451,6 +457,10 @@ class IcebergTable:
                         "path": dfle["file_path"],
                         "record_count": int(dfle["record_count"]),
                         "partition": dfle.get("partition") or {},
+                        "null_value_counts": {
+                            kv["key"]: kv["value"]
+                            for kv in (dfle.get("null_value_counts") or [])
+                        },
                         "lower_bounds": {
                             kv["key"]: kv["value"]
                             for kv in (dfle.get("lower_bounds") or [])
@@ -519,7 +529,7 @@ class IcebergTable:
     def _read_files(self, md: dict, files: list[dict]) -> DataFrame:
         schema = self._spark_schema(md)
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         # position deletes (round 10): the applicable delete parquets
         # hold (file_path, pos) rows — read them AS A DATAFRAME and
         # anti-join on (data-file basename, _metadata.row_index), the
@@ -738,8 +748,6 @@ class IcebergTable:
         needs (the deltalog txn-action twin on this format)."""
         import shutil
 
-        import pyarrow.parquet as pq
-
         pby = (
             [partition_by]
             if isinstance(partition_by, str)
@@ -880,30 +888,18 @@ class IcebergTable:
                 dst = os.path.join(self.root, rel)
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 os.replace(src, dst)
-                pf = pq.ParquetFile(dst)
-                lows, highs = [], []
-                pnames = list(pf.metadata.schema.names)
-                for cname in sorted(statable):
-                    if cname not in pnames:
-                        continue
-                    ci = pnames.index(cname)
-                    mn = mx = None
-                    for rg in range(pf.metadata.num_row_groups):
-                        st = pf.metadata.row_group(rg).column(ci).statistics
-                        if st is None or not st.has_min_max:
-                            mn = mx = None
-                            break
-                        mn = st.min if mn is None else min(mn, st.min)
-                        mx = st.max if mx is None else max(mx, st.max)
-                    if mn is not None:
-                        tname = ftype_of[cname]
+                n_rows, folded = footer_stats(dst, sorted(statable))
+                lows, highs, nulls = [], [], []
+                for cname, st in folded.items():
+                    fid, tname = fid_of[cname], ftype_of[cname]
+                    if st["nulls"] is not None:
+                        nulls.append({"key": fid, "value": st["nulls"]})
+                    if st["min"] is not None:
                         lows.append(
-                            {"key": fid_of[cname],
-                             "value": sv_encode(tname, mn)}
+                            {"key": fid, "value": sv_encode(tname, st["min"])}
                         )
                         highs.append(
-                            {"key": fid_of[cname],
-                             "value": sv_encode(tname, mx)}
+                            {"key": fid, "value": sv_encode(tname, st["max"])}
                         )
                 entries.append(
                     {
@@ -916,8 +912,9 @@ class IcebergTable:
                             "file_path": rel,
                             "file_format": "PARQUET",
                             "partition": pvals,
-                            "record_count": pf.metadata.num_rows,
+                            "record_count": n_rows,
                             "file_size_in_bytes": os.path.getsize(dst),
+                            "null_value_counts": nulls or None,
                             "lower_bounds": lows or None,
                             "upper_bounds": highs or None,
                         },
@@ -1290,7 +1287,8 @@ class IcebergTable:
                     )
                 ]
             )
-            mapping = self.spark.createDataFrame(
+            mapping = local_frame(
+                self.spark,
                 list(path_of.items()), "__fname__ string, file_path string"
             )
             pos_df = (
