@@ -38,13 +38,21 @@ from luxo_rs_spark.sources.registry import (
 logger = logging.getLogger("luxo_rs_spark")
 
 
+def _driver_memory() -> str:
+    """Half the host's physical memory, capped at 48g. The JVM lets
+    its heap grow to the maximum before collecting hard, so a fixed 48g
+    heap can outgrow a small host and get the process OOM-killed."""
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 21
+    return f"{min(half_mb, 48 << 10)}m"
+
+
 #: defaults applied at session build time. Runtime-settable subset is also
 #: re-applied to foreign sessions via `ensure_session_confs`.
 DEFAULT_CONFS = {
     # local-mode driver == the whole cluster: size the JVM heap to the
     # machine (default 1g thrashes GC under a 32-thread battery). On a
     # real cluster this is per-executor memory instead.
-    "spark.driver.memory": "48g",
+    "spark.driver.memory": _driver_memory(),
     # adaptive execution: runtime re-plan, partition coalescing, skew joins
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",

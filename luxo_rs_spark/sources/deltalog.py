@@ -5,11 +5,10 @@ Implements the PUBLIC Delta protocol (delta.io PROTOCOL.md): the log is
 ``_delta_log/%020d.json`` newline-delimited action files — ``protocol``
 / ``metaData`` / ``add`` / ``remove`` (+ ``commitInfo``/``txn`` noise a
 reader must skip) — optionally compacted into
-``%020d.checkpoint.parquet`` referenced by ``_last_checkpoint``. Unlike
-``streaming/table_format.py``'s delta-rs backend (import-gated on the
-``deltalake`` package, absent here), this module depends on NOTHING
-beyond pyarrow: a table written by Spark's Delta connector, delta-rs,
-or any other engine reconstructs from the raw log bytes.
+``%020d.checkpoint.parquet`` referenced by ``_last_checkpoint``. This
+module depends on NOTHING beyond pyarrow (no ``deltalake`` package): a
+table written by Spark's Delta connector, delta-rs, or any other engine
+reconstructs from the raw log bytes.
 
 Reader semantics (the protocol's state reconstruction):
 
@@ -49,8 +48,11 @@ Reader semantics (the protocol's state reconstruction):
 
 Writer (minimal but spec-faithful; enough that the reader-side
 machinery and the tests' hand-built "foreign" logs meet in the middle):
-exclusive-create commits (the protocol's put-if-absent requirement),
-protocol+metaData at version 0, relative-path ``add`` actions with
+staged data files and exclusive-create commits through
+``sources/commit.py`` (the protocol's put-if-absent requirement; a
+commit that loses the race raises ``ConcurrentCommitError``, and every
+commit claims the version after the snapshot it read), protocol+metaData
+at version 0, relative-path ``add`` actions with
 stats, ``remove``+``add`` overwrites, hive-layout partitioned writes,
 and parquet checkpoints + ``_last_checkpoint``. Deterministic: the
 table id derives from the root path, ``modificationTime`` is pinned 0
@@ -61,7 +63,6 @@ bit-stable.
 from __future__ import annotations
 
 import hashlib
-import itertools
 import json
 import os
 
@@ -69,11 +70,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from luxo_rs_spark.sources import commit
+from luxo_rs_spark.sources.commit import ConcurrentCommitError
 from luxo_rs_spark.sources.footer import footer_stats
 from luxo_rs_spark.sources.registry import local_frame
 
 _LOG_DIR = "_delta_log"
-_SEQ = itertools.count()
 
 
 class DeltaProtocolError(RuntimeError):
@@ -335,8 +337,8 @@ class DeltaLog:
     # -- state reconstruction --------------------------------------------------
 
     def snapshot(self, version: int | None = None) -> dict:
-        """Replay the log into {schema, partition_columns, adds} at
-        ``version`` (default latest)."""
+        """Replay the log into {version, schema, partition_columns,
+        adds, ...} at ``version`` (default latest)."""
         if version is None:
             version = self.latest_version()
         if version not in set(self.versions()):
@@ -344,6 +346,7 @@ class DeltaLog:
                 f"delta table {self.root}: no version {version}"
             )
         state: dict = {
+            "version": version,
             "schema": None,
             "schema_string": None,
             "fields_json": [],
@@ -867,35 +870,26 @@ class DeltaLog:
             f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:32]}"
         )
 
-    def _try_commit(self, version: int, actions: list[dict]) -> bool:
+    def _commit(self, version: int, actions: list[dict]) -> int:
+        """Claim log entry ``version`` with ``actions`` (the protocol's
+        put-if-absent commit, ``commit.claim``)."""
         os.makedirs(self.log_dir, exist_ok=True)
-        path = os.path.join(self.log_dir, f"{version:020d}.json")
-        try:  # the protocol's put-if-absent commit
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            return False
-        with os.fdopen(fd, "w") as f:
-            for a in actions:
-                f.write(json.dumps(a, sort_keys=True) + "\n")
-        return True
+        text = "".join(json.dumps(a, sort_keys=True) + "\n" for a in actions)
+        if not commit.claim(
+            os.path.join(self.log_dir, f"{version:020d}.json"), text
+        ):
+            raise ConcurrentCommitError(
+                f"delta table {self.root}: lost the commit race at "
+                f"version {version}; re-read and retry"
+            )
+        return version
 
     def _stage_files(
         self, df: DataFrame, partition_by: list[str] | None
     ) -> list[dict]:
-        """Write data files and return their add actions (relative
-        paths, sizes, spec-string partitionValues, stats)."""
-        import shutil
-
-        stage = os.path.join(self.root, f"_stage_{os.getpid():x}")
-        if partition_by:
-            (
-                df.repartition(*[F.col(c) for c in partition_by])
-                .write.mode("overwrite")
-                .partitionBy(*partition_by)
-                .parquet(stage)
-            )
-        else:
-            df.write.mode("overwrite").parquet(stage)
+        """Write data files (``commit.stage``) and return their add
+        actions (relative writer-unique paths, sizes, spec-string
+        partitionValues, stats)."""
         stat_cols = [
             f.name
             for f in df.schema.fields
@@ -905,22 +899,12 @@ class DeltaLog:
                 "string", "date", "boolean")
         ]
         adds = []
-        token = f"{os.getpid():x}-{next(_SEQ):04x}"
-        i = 0
-        for root_dir, _dirs, files in sorted(os.walk(stage)):
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
-                    continue
-                src = os.path.join(root_dir, fn)
-                rel_dir = os.path.relpath(root_dir, stage)
-                pv = {}
-                if rel_dir != ".":
-                    for seg in rel_dir.split(os.sep):
-                        k, _, v = seg.partition("=")
-                        pv[k] = v
-                name = f"part-{i:05d}-{token}.parquet"
-                sub = "" if rel_dir == "." else rel_dir + "/"
-                rel = sub + name
+        with commit.stage(df, self.root, partition_by or ()) as (
+            token, staged
+        ):
+            for i, (src, pv) in enumerate(staged):
+                sub = "".join(f"{k}={v}/" for k, v in pv.items())
+                rel = f"{sub}part-{i:05d}-{token}.parquet"
                 dst = os.path.join(self.root, rel)
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 os.replace(src, dst)
@@ -943,8 +927,6 @@ class DeltaLog:
                         "stats": json.dumps(stats, sort_keys=True),
                     }
                 )
-                i += 1
-        shutil.rmtree(stage, ignore_errors=True)
         return adds
 
     def write(
@@ -1006,7 +988,7 @@ class DeltaLog:
                 )
             elif mode != "append":
                 raise ValueError(f"unsupported write mode {mode!r}")
-            version = vs[-1] + 1
+            version = s["version"] + 1
             if self._mapping_mode(s) in ("name", "id"):
                 # data files + partitionValues address PHYSICAL names;
                 # the mapping id is stamped as the parquet field id so
@@ -1036,12 +1018,7 @@ class DeltaLog:
         actions.extend(
             {"add": a} for a in self._stage_files(df, partition_by)
         )
-        if not self._try_commit(version, actions):
-            raise FileExistsError(
-                f"delta table {self.root}: lost the commit race at "
-                f"version {version}; re-read and retry"
-            )
-        return version
+        return self._commit(version, actions)
 
     def delete_where(self, col: str, lo, hi, mode: str = "cow") -> int:
         """Delete rows with ``col BETWEEN lo AND hi``.
@@ -1109,13 +1086,7 @@ class DeltaLog:
         actions.extend(
             {"add": a} for a in self._stage_files(survivors, part_by)
         )
-        version = self.latest_version() + 1
-        if not self._try_commit(version, actions):
-            raise FileExistsError(
-                f"delta table {self.root}: lost the commit race at "
-                f"version {version}; re-read and retry"
-            )
-        return version
+        return self._commit(s["version"] + 1, actions)
 
     def _delete_where_dv(self, col: str, lo, hi) -> int:
         """Deletion-vector delete (see ``delete_where``): one Spark job
@@ -1139,14 +1110,9 @@ class DeltaLog:
             mx = (st.get("maxValues") or {}).get(phys_col)
             if mn is None or not (mx < lo or mn > hi):
                 cands.append(a)
-        version = self.latest_version() + 1
+        version = s["version"] + 1
         if not cands:
-            if not self._try_commit(version, []):
-                raise FileExistsError(
-                    f"delta table {self.root}: lost the commit race at "
-                    f"version {version}; re-read and retry"
-                )
-            return version
+            return self._commit(version, [])
         # matching positions in candidate files (raw physical read +
         # _metadata.row_index; positions are FILE positions, so
         # existing DVs must NOT shift them — read raw, filter, then
@@ -1183,7 +1149,7 @@ class DeltaLog:
         # vector <size BE><RoaringBitmapArray><crc32 BE> at its offset
         u = _uuid.UUID(
             hex=hashlib.md5(
-                f"{self.root}:{version}:dv".encode()
+                f"{self.root}:{version}:dv:{commit.writer_token()}".encode()
             ).hexdigest()
         )
         blob = bytearray([_DV_FORMAT_VERSION])
@@ -1246,12 +1212,7 @@ class DeltaLog:
                 old["deletionVector"] = desc_by_fname[fname]
                 old["dataChange"] = True
                 actions.append({"add": old})
-        if not self._try_commit(version, actions):
-            raise FileExistsError(
-                f"delta table {self.root}: lost the commit race at "
-                f"version {version}; re-read and retry"
-            )
-        return version
+        return self._commit(version, actions)
 
     def enable_column_mapping(self, mode: str = "name") -> int:
         """Upgrade the table to column mapping (``mode`` "name" or
@@ -1293,13 +1254,7 @@ class DeltaLog:
                 }
             },
         ]
-        version = self.latest_version() + 1
-        if not self._try_commit(version, actions):
-            raise FileExistsError(
-                f"delta table {self.root}: lost the commit race at "
-                f"version {version}; re-read and retry"
-            )
-        return version
+        return self._commit(s["version"] + 1, actions)
 
     def rename_column(self, old: str, new: str) -> int:
         """Metadata-only rename (requires column mapping): the logical
@@ -1337,13 +1292,7 @@ class DeltaLog:
                 }
             }
         ]
-        version = self.latest_version() + 1
-        if not self._try_commit(version, actions):
-            raise FileExistsError(
-                f"delta table {self.root}: lost the commit race at "
-                f"version {version}; re-read and retry"
-            )
-        return version
+        return self._commit(s["version"] + 1, actions)
 
     def checkpoint(self) -> int:
         """Compact the live state at the latest version into

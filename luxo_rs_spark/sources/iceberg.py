@@ -45,8 +45,12 @@ The minimal writer (append / overwrite / replace-compaction,
 identity partitioning over one or more columns, ``txn`` idempotence
 watermarks) exists so the q481/q489/q490 lifecycle lanes and the
 hand-built-foreign tests meet in the middle, exactly like
-deltalog's. Deterministic: snapshot ids are dense integers,
-timestamps pinned 0, the avro sync marker is content-derived.
+deltalog's. It stages and commits through ``sources/commit.py``:
+every data, delete, manifest and manifest-list name carries a writer
+token, each commit claims the metadata version after the one it read
+(a lost race raises ``ConcurrentCommitError``), and snapshot ids
+continue from the largest one kept. Timestamps are pinned 0 and the
+avro sync marker is content-derived.
 """
 
 from __future__ import annotations
@@ -59,7 +63,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from luxo_rs_spark.sources import commit
 from luxo_rs_spark.sources.avro_io import read_avro, write_avro
+from luxo_rs_spark.sources.commit import ConcurrentCommitError
 from luxo_rs_spark.sources.footer import footer_stats
 from luxo_rs_spark.sources.registry import local_frame
 
@@ -746,15 +752,14 @@ class IcebergTable:
         below the watermark NO-OPS returning the current snapshot id
         — the exactly-once contract a streaming foreachBatch sink
         needs (the deltalog txn-action twin on this format)."""
-        import shutil
-
+        if mode not in ("append", "overwrite", "replace"):
+            raise ValueError(f"unsupported write mode {mode!r}")
         pby = (
             [partition_by]
             if isinstance(partition_by, str)
             else list(partition_by or [])
         )
-        vs = self._metadata_versions()
-        creating = not vs
+        creating = not self._metadata_versions()
         if creating:
             os.makedirs(self.meta_dir, exist_ok=True)
             os.makedirs(self.data_dir, exist_ok=True)
@@ -804,30 +809,18 @@ class IcebergTable:
                 "snapshot-log": [],
                 "properties": {},
             }
-            meta_version = 1
+            meta_version = snap_id = seq = 1
         else:
-            md = self.metadata()
-            meta_version = vs[-1] + 1
-            specs = md.get("partition-specs") or []
-            spec = next(
-                s
-                for s in specs
-                if s.get("spec-id", 0) == md.get("default-spec-id", 0)
-            )
-            declared = [
-                f["name"]
-                for f in spec.get("fields", [])
-                if f.get("transform") == "identity"
-            ]
-            if not pby and declared:
-                pby = list(declared)
-        if txn is not None and not creating:
-            wm = int(
-                (md.get("properties") or {}).get(f"txn.{txn[0]}", -1)
-            )
-            if wm >= int(txn[1]):
-                # replayed batch: exactly-once no-op
-                return int(md["current-snapshot-id"])
+            md, meta_version, snap_id, seq = self._next_commit()
+            if txn is not None:
+                wm = int(
+                    (md.get("properties") or {}).get(f"txn.{txn[0]}", -1)
+                )
+                if wm >= int(txn[1]):
+                    # replayed batch: exactly-once no-op
+                    return int(md["current-snapshot-id"])
+            if not pby:
+                pby = self._partition_names(md)
         fields = self._schema_fields(md)
         fid_of = {f["name"]: f["id"] for f in fields}
         ftype_of = {f["name"]: f["type"] for f in fields}
@@ -845,50 +838,22 @@ class IcebergTable:
                 for c in df.columns
             ]
         )
-
-        seq = int(md.get("last-sequence-number", 0)) + 1
-        snap_id = len(self.snapshots(md)) + 1
-
-        # stage data files
-        stage = os.path.join(self.root, f"_stage_{os.getpid():x}")
-        if pby:
-            (
-                df.repartition(*[F.col(c) for c in pby])
-                .write.mode("overwrite")
-                .partitionBy(*pby)
-                .parquet(stage)
-            )
-        else:
-            df.write.mode("overwrite").parquet(stage)
-        statable = {
+        statable = sorted(
             f["name"]
             for f in fields
             if f["type"] in ("int", "long", "float", "double", "string")
-        }
+        )
         entries = []
-        i = 0
-        for root_dir, _dirs, fnames in sorted(os.walk(stage)):
-            for fn in sorted(fnames):
-                if not fn.endswith(".parquet"):
-                    continue
-                src = os.path.join(root_dir, fn)
-                rel_dir = os.path.relpath(root_dir, stage)
-                pvals: dict = {}
-                if rel_dir != ".":
-                    for seg in rel_dir.split(os.sep):
-                        k, _, v = seg.partition("=")
-                        # identity partition: typed value
-                        if ftype_of.get(k) in ("int", "long"):
-                            pvals[k] = int(v)
-                        else:
-                            pvals[k] = v
-                name = f"snap{snap_id:05d}-{i:05d}.parquet"
-                sub = "" if rel_dir == "." else rel_dir + "/"
-                rel = os.path.join("data", sub + name)
+        with commit.stage(df, self.root, pby) as (token, staged):
+            for i, (src, hive) in enumerate(staged):
+                sub = "".join(f"{k}={v}/" for k, v in hive.items())
+                rel = os.path.join(
+                    "data", f"{sub}snap{snap_id:05d}-{i:05d}-{token}.parquet"
+                )
                 dst = os.path.join(self.root, rel)
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 os.replace(src, dst)
-                n_rows, folded = footer_stats(dst, sorted(statable))
+                n_rows, folded = footer_stats(dst, statable)
                 lows, highs, nulls = [], [], []
                 for cname, st in folded.items():
                     fid, tname = fid_of[cname], ftype_of[cname]
@@ -911,7 +876,13 @@ class IcebergTable:
                             "content": 0,
                             "file_path": rel,
                             "file_format": "PARQUET",
-                            "partition": pvals,
+                            # identity partition: typed value
+                            "partition": {
+                                k: int(v)
+                                if ftype_of.get(k) in ("int", "long")
+                                else v
+                                for k, v in hive.items()
+                            },
                             "record_count": n_rows,
                             "file_size_in_bytes": os.path.getsize(dst),
                             "null_value_counts": nulls or None,
@@ -920,8 +891,6 @@ class IcebergTable:
                         },
                     }
                 )
-                i += 1
-        shutil.rmtree(stage, ignore_errors=True)
 
         part_fields = [
             {
@@ -935,7 +904,7 @@ class IcebergTable:
             for c in pby
         ]
         manifest_rel = os.path.join(
-            "metadata", f"manifest-{snap_id:05d}.avro"
+            "metadata", f"manifest-{snap_id:05d}-{token}.avro"
         )
         write_avro(
             os.path.join(self.root, manifest_rel),
@@ -991,53 +960,18 @@ class IcebergTable:
         if not creating and mode == "append":
             cur = self._snapshot(md, None)
             _, prior_mfs = read_avro(self._abs(cur["manifest-list"]))
-        elif mode not in ("append", "overwrite", "replace"):
-            raise ValueError(f"unsupported write mode {mode!r}")
-        ml_rel = os.path.join(
-            "metadata", f"snap-{snap_id:05d}-manifest-list.avro"
+        return self._commit_snapshot(
+            md, meta_version, snap_id, seq, prior_mfs + [new_mf],
+            "append" if creating else mode, token, txn,
         )
-        write_avro(
-            os.path.join(self.root, ml_rel),
-            _MANIFEST_LIST_SCHEMA,
-            prior_mfs + [new_mf],
-        )
-        snapshot = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": 0,
-            "manifest-list": ml_rel,
-            "summary": {"operation": mode if not creating else "append"},
-            "schema-id": md.get("current-schema-id", 0),
-        }
-        md = dict(md)
-        md["snapshots"] = self.snapshots(md) + [snapshot]
-        md["current-snapshot-id"] = snap_id
-        md["last-sequence-number"] = seq
-        md["snapshot-log"] = list(md.get("snapshot-log", [])) + [
-            {"snapshot-id": snap_id, "timestamp-ms": 0}
-        ]
-        if txn is not None:
-            props = dict(md.get("properties") or {})
-            props[f"txn.{txn[0]}"] = str(int(txn[1]))
-            md["properties"] = props
-        path = os.path.join(self.meta_dir, f"v{meta_version}.metadata.json")
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "w") as f:
-            json.dump(md, f, sort_keys=True)
-        with open(
-            os.path.join(self.meta_dir, "version-hint.text"), "w"
-        ) as f:
-            f.write(str(meta_version))
-        return snap_id
 
     def _commit_schema(
-        self, md: dict, new_fields: list[dict],
+        self, md: dict, meta_version: int, new_fields: list[dict],
         last_column_id: int | None = None,
     ) -> None:
         """Append a new schema version (metadata-only commit — no
         snapshot, no data movement) and point current-schema-id at
         it."""
-        vs = self._metadata_versions()
         schemas = list(md.get("schemas", []))
         new_sid = 1 + max(
             (int(s.get("schema-id", 0)) for s in schemas), default=-1
@@ -1051,17 +985,7 @@ class IcebergTable:
         md2["current-schema-id"] = new_sid
         if last_column_id is not None:
             md2["last-column-id"] = last_column_id
-        meta_version = vs[-1] + 1
-        path = os.path.join(
-            self.meta_dir, f"v{meta_version}.metadata.json"
-        )
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "w") as f:
-            json.dump(md2, f, sort_keys=True)
-        with open(
-            os.path.join(self.meta_dir, "version-hint.text"), "w"
-        ) as f:
-            f.write(str(meta_version))
+        self._publish(md2, meta_version)
 
     def rename_column(self, old: str, new: str) -> None:
         """SCHEMA EVOLUTION: rename a column — metadata only. The
@@ -1072,7 +996,7 @@ class IcebergTable:
         boundary: historical manifests key their avro partition
         structs by write-time name (real Iceberg resolves those by
         avro field id, which this reader does not implement)."""
-        md = self.metadata()
+        md, meta_version, _, _ = self._next_commit()
         fields = [dict(f) for f in self._schema_fields(md)]
         names = {f["name"] for f in fields}
         if old not in names:
@@ -1099,14 +1023,14 @@ class IcebergTable:
         for f in fields:
             if f["name"] == old:
                 f["name"] = new
-        self._commit_schema(md, fields)
+        self._commit_schema(md, meta_version, fields)
 
     def add_column(self, name: str, type_name: str) -> None:
         """SCHEMA EVOLUTION: add a column — metadata only. Gets a
         fresh field id (never reused); files written before the
         column surface NULLs through the per-file id resolution."""
         _spark_type(type_name)  # validates the type is implemented
-        md = self.metadata()
+        md, meta_version, _, _ = self._next_commit()
         fields = [dict(f) for f in self._schema_fields(md)]
         if name in {f["name"] for f in fields}:
             raise ValueError(f"column {name!r} already exists")
@@ -1115,7 +1039,9 @@ class IcebergTable:
             {"id": new_id, "name": name, "required": False,
              "type": type_name}
         )
-        self._commit_schema(md, fields, last_column_id=new_id)
+        self._commit_schema(
+            md, meta_version, fields, last_column_id=new_id
+        )
 
     def _file_column_resolution(
         self, abs_path: str, data_fields: list[dict]
@@ -1161,8 +1087,7 @@ class IcebergTable:
         reach is ever deleted. Commits a fresh metadata version;
         time travel to expired snapshot ids raises afterwards.
         Returns {expired, kept, orphans_removed}."""
-        md = self.metadata()
-        vs = self._metadata_versions()
+        md, meta_version, _, _ = self._next_commit()
         lineage = sorted(
             self.snapshots(md),
             key=lambda s: int(s["sequence-number"]),
@@ -1213,17 +1138,7 @@ class IcebergTable:
             for entry in md.get("snapshot-log", [])
             if entry.get("snapshot-id") in keep_ids
         ]
-        meta_version = vs[-1] + 1
-        path = os.path.join(
-            self.meta_dir, f"v{meta_version}.metadata.json"
-        )
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "w") as f:
-            json.dump(md2, f, sort_keys=True)
-        with open(
-            os.path.join(self.meta_dir, "version-hint.text"), "w"
-        ) as f:
-            f.write(str(meta_version))
+        self._publish(md2, meta_version)
         return {
             "expired": len(expired),
             "kept": len(keep),
@@ -1253,7 +1168,8 @@ class IcebergTable:
         reads anti-join the positions out."""
         import pyarrow.parquet as pq
 
-        md = self.metadata()
+        md, meta_version, snap_id, seq = self._next_commit()
+        token = commit.writer_token()
         fields = self._schema_fields(md)
         fld = next((f for f in fields if f["name"] == col), None)
         if fld is None:
@@ -1266,10 +1182,6 @@ class IcebergTable:
             mx = sv_decode(ftype, fl["upper_bounds"].get(fid))
             if mn is None or not (mx < lo or mn > hi):
                 cands.append(fl)
-        vs = self._metadata_versions()
-        meta_version = vs[-1] + 1
-        seq = int(md.get("last-sequence-number", 0)) + 1
-        snap_id = len(self.snapshots(md)) + 1
         cur = self._snapshot(md, None)
         _, prior_mfs = read_avro(self._abs(cur["manifest-list"]))
         new_mfs = list(prior_mfs)
@@ -1307,18 +1219,19 @@ class IcebergTable:
                 .sort("file_path", "pos")
             )
             del_rel = self._write_single_parquet(
-                pos_df, f"delete-{snap_id:05d}.parquet"
+                pos_df, f"delete-{snap_id:05d}-{token}.parquet"
             )
             n_pos = pq.ParquetFile(
                 os.path.join(self.root, del_rel)
             ).metadata.num_rows
             new_mfs.append(
                 self._delete_manifest(
-                    del_rel, n_pos, snap_id, seq, content=1
+                    del_rel, n_pos, snap_id, seq, token, content=1
                 )
             )
-        return self._commit_snapshot(md, meta_version, snap_id, seq,
-                                     new_mfs, "delete")
+        return self._commit_snapshot(
+            md, meta_version, snap_id, seq, new_mfs, "delete", token
+        )
 
     def delete_equality(self, keys: DataFrame) -> int:
         """EQUALITY-DELETE commit (Iceberg v2): every data row matching
@@ -1329,7 +1242,8 @@ class IcebergTable:
         re-inserted after the delete survive (the spec's rule)."""
         import pyarrow.parquet as pq
 
-        md = self.metadata()
+        md, meta_version, snap_id, seq = self._next_commit()
+        token = commit.writer_token()
         fields = self._schema_fields(md)
         fid_of = {f["name"]: f["id"] for f in fields}
         bad = [c for c in keys.columns if c not in fid_of]
@@ -1343,43 +1257,34 @@ class IcebergTable:
                 for c in keys.columns
             ]
         )
-        vs = self._metadata_versions()
-        meta_version = vs[-1] + 1
-        seq = int(md.get("last-sequence-number", 0)) + 1
-        snap_id = len(self.snapshots(md)) + 1
         cur = self._snapshot(md, None)
         _, prior_mfs = read_avro(self._abs(cur["manifest-list"]))
         del_rel = self._write_single_parquet(
             keys.distinct().sort(*keys.columns),
-            f"eqdelete-{snap_id:05d}.parquet",
+            f"eqdelete-{snap_id:05d}-{token}.parquet",
         )
         n_keys = pq.ParquetFile(
             os.path.join(self.root, del_rel)
         ).metadata.num_rows
         new_mfs = list(prior_mfs) + [
             self._delete_manifest(
-                del_rel, n_keys, snap_id, seq, content=2,
+                del_rel, n_keys, snap_id, seq, token, content=2,
                 equality_ids=[fid_of[c] for c in keys.columns],
             )
         ]
-        return self._commit_snapshot(md, meta_version, snap_id, seq,
-                                     new_mfs, "delete")
+        return self._commit_snapshot(
+            md, meta_version, snap_id, seq, new_mfs, "delete", token
+        )
 
     def _write_single_parquet(self, df: DataFrame, name: str) -> str:
-        """Stage a small DataFrame as ONE parquet under data/."""
-        import shutil
-
+        """Stage a small DataFrame as ONE parquet ``data/<name>``."""
         rel = os.path.join("data", name)
-        dst = os.path.join(self.root, rel)
-        stage = dst + ".stage"
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        staged = [f for f in os.listdir(stage) if f.endswith(".parquet")]
-        os.replace(os.path.join(stage, staged[0]), dst)
-        shutil.rmtree(stage, ignore_errors=True)
+        with commit.stage(df.coalesce(1), self.data_dir) as (_, staged):
+            os.replace(staged[0][0], os.path.join(self.root, rel))
         return rel
 
     def _delete_manifest(
-        self, del_rel: str, n: int, snap_id: int, seq: int,
+        self, del_rel: str, n: int, snap_id: int, seq: int, token: str,
         content: int, equality_ids: list[int] | None = None,
     ) -> dict:
         """Write a one-entry delete manifest; return its list row."""
@@ -1403,7 +1308,7 @@ class IcebergTable:
             },
         }
         manifest_rel = os.path.join(
-            "metadata", f"manifest-del-{snap_id:05d}.avro"
+            "metadata", f"manifest-del-{snap_id:05d}-{token}.avro"
         )
         write_avro(
             os.path.join(self.root, manifest_rel),
@@ -1429,12 +1334,55 @@ class IcebergTable:
             "partitions": None,
         }
 
+    def _next_commit(self) -> tuple[dict, int, int, int]:
+        """The newest metadata and the ids the next commit takes:
+        ``(md, meta_version, snap_id, seq)``. ``md`` is the newest
+        LISTED version, so if another commit lands after this read the
+        claim of ``meta_version`` fails instead of overwriting it.
+        Snapshot ids continue from the largest one kept, not from the
+        count: expiry shrinks the list, and a reused id would alias a
+        retained snapshot."""
+        vs = self._metadata_versions()
+        if not vs:
+            raise FileNotFoundError(f"iceberg table {self.root}: no metadata")
+        md = self.metadata(vs[-1])
+        snap_id = 1 + max(
+            (int(s["snapshot-id"]) for s in self.snapshots(md)), default=0
+        )
+        seq = int(md.get("last-sequence-number", 0)) + 1
+        return md, vs[-1] + 1, snap_id, seq
+
+    def _publish(self, md: dict, meta_version: int) -> None:
+        """Claim ``v<meta_version>.metadata.json`` (``commit.claim``;
+        a lost race raises ``ConcurrentCommitError``), then point
+        ``version-hint.text`` at it through a temporary file and
+        ``os.replace``, so a concurrent ``metadata()`` never reads a
+        half-written hint."""
+        if not commit.claim(
+            os.path.join(self.meta_dir, f"v{meta_version}.metadata.json"),
+            json.dumps(md, sort_keys=True),
+        ):
+            raise ConcurrentCommitError(
+                f"iceberg table {self.root}: lost the commit race at "
+                f"metadata version {meta_version}; re-read and retry"
+            )
+        tmp = os.path.join(
+            self.meta_dir, f".version-hint.{commit.writer_token()}"
+        )
+        with open(tmp, "w") as f:
+            f.write(str(meta_version))
+        os.replace(tmp, os.path.join(self.meta_dir, "version-hint.text"))
+
     def _commit_snapshot(
         self, md: dict, meta_version: int, snap_id: int, seq: int,
-        new_mfs: list[dict], operation: str,
+        new_mfs: list[dict], operation: str, token: str,
+        txn: tuple[str, int] | None = None,
     ) -> int:
+        """Write the manifest list ``new_mfs`` and publish ``md`` plus
+        the new snapshot (and the ``txn`` watermark) as
+        ``meta_version``; returns ``snap_id``."""
         ml_rel = os.path.join(
-            "metadata", f"snap-{snap_id:05d}-manifest-list.avro"
+            "metadata", f"snap-{snap_id:05d}-{token}-manifest-list.avro"
         )
         write_avro(
             os.path.join(self.root, ml_rel),
@@ -1456,16 +1404,11 @@ class IcebergTable:
         md["snapshot-log"] = list(md.get("snapshot-log", [])) + [
             {"snapshot-id": snap_id, "timestamp-ms": 0}
         ]
-        path = os.path.join(
-            self.meta_dir, f"v{meta_version}.metadata.json"
-        )
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "w") as f:
-            json.dump(md, f, sort_keys=True)
-        with open(
-            os.path.join(self.meta_dir, "version-hint.text"), "w"
-        ) as f:
-            f.write(str(meta_version))
+        if txn is not None:
+            props = dict(md.get("properties") or {})
+            props[f"txn.{txn[0]}"] = str(int(txn[1]))
+            md["properties"] = props
+        self._publish(md, meta_version)
         return snap_id
 
     @staticmethod

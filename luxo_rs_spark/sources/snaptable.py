@@ -9,10 +9,10 @@ cluster scale:
 
 1. **Atomic, optimistically-concurrent commits.** A snapshot is a JSON
    manifest ``_snapshots/v%08d.json`` listing immutable data files. The
-   commit is ``open(path, "x")`` — exclusive create, atomic on POSIX —
-   so two racing writers cannot both land version N: the loser re-reads
-   the latest snapshot, rebases its file list, and retries. (On an
-   object store this exact protocol becomes a conditional PUT — the
+   commit is ``sources.commit.claim`` — an exclusive create, atomic on
+   POSIX — so two racing writers cannot both land version N; what the
+   loser does is the lost-race contract in ``sources/commit.py``. (On
+   an object store this exact protocol becomes a conditional PUT — the
    Delta commit-service pattern; the manifest layout is unchanged.)
 2. **Time travel.** Every version's manifest is retained; a read at
    version N is exactly the file list of manifest N. Readers never see
@@ -71,7 +71,6 @@ create); it simply points at the checkpoint (``files_ckpt`` +
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
 
@@ -79,24 +78,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from luxo_rs_spark.sources import commit
+from luxo_rs_spark.sources.commit import ConcurrentCommitError
 from luxo_rs_spark.sources.footer import footer_stats
 from luxo_rs_spark.sources.registry import local_frame
 
 _SNAP_DIR = "_snapshots"
 _DATA_DIR = "data"
 
-
-class ConcurrentCommitError(RuntimeError):
-    """A non-commutative commit (delete/merge/compact/metadata) lost an
-    optimistic-concurrency race: its carry/rewrite sets were computed
-    against a manifest that is no longer the latest, so blindly
-    retrying would silently drop the winner's files (a lost update).
-    The caller must re-read the table and re-issue the operation —
-    the Delta ConcurrentModificationException contract. Appends are
-    exempt: they commute, so they rebase and retry internally."""
-
-#: per-process commit sequence, part of the writer-unique file token
-_WRITER_SEQ = itertools.count()
 
 #: Bloom geometry: m bits, k md5-derived probes. Deterministic and
 #: engine-agnostic (the q464 oracle replays membership in SQL).
@@ -173,8 +162,11 @@ class SnapTable:
             raise FileNotFoundError(
                 f"snaptable {self.root}: no snapshot v{version}"
             )
-        with open(os.path.join(self.snap_dir, f"v{version:08d}.json")) as f:
+        with open(self._manifest_path(version)) as f:
             return json.load(f)
+
+    def _manifest_path(self, version: int) -> str:
+        return os.path.join(self.snap_dir, f"v{version:08d}.json")
 
     def history(self) -> list[dict]:
         return [self.manifest(v) for v in self.versions()]
@@ -367,8 +359,7 @@ class SnapTable:
             tbl = parts[0]
         else:
             tbl = pa.concat_tables(parts, promote_options="permissive")
-        token = f"{os.getpid():x}-{next(_WRITER_SEQ):04x}"
-        rel = self._ckpt_rel(version, token)
+        rel = self._ckpt_rel(version, commit.writer_token())
         pq.write_table(tbl, os.path.join(self.root, rel))
         return {"files_ckpt": rel, "num_files": tbl.num_rows}
 
@@ -1128,7 +1119,7 @@ class SnapTable:
         # size and proportional only to deleted rows, so mass deletes
         # may use DVs too; CoW remains the right call when most of a
         # file dies (the read-side anti-join tax).
-        token = f"{os.getpid():x}-{next(_WRITER_SEQ):04x}"
+        token = commit.writer_token()
         version = self.latest_version() + 1
         dv_rel = os.path.join(
             _DATA_DIR, f"v{version:08d}-dv-{token}.parquet"
@@ -1302,7 +1293,7 @@ class SnapTable:
             tuple(target.get("bloom_cols", [])),
         )
         manifest.update(entry_fields)
-        if self._try_write_manifest(new_version, manifest):
+        if self._claim(manifest):
             return new_version
         self._drop_ckpt(entry_fields)
         raise ConcurrentCommitError(
@@ -1628,7 +1619,7 @@ class SnapTable:
                 base, version=version, parent=base["version"], operation=op
             )
             manifest.update(mutate(base))
-            if self._try_write_manifest(version, manifest):
+            if self._claim(manifest):
                 return version
 
     def rename_column(self, old: str, new: str) -> int:
@@ -1764,7 +1755,7 @@ class SnapTable:
                 operation="add_constraint",
                 constraints=cons,
             )
-            if self._try_write_manifest(version, manifest):
+            if self._claim(manifest):
                 return version
 
     def _constraints(self) -> dict:
@@ -1832,7 +1823,7 @@ class SnapTable:
         removed_manifests = 0
         for v in vs:
             if v not in keep_vs:
-                os.remove(os.path.join(self.snap_dir, f"v{v:08d}.json"))
+                os.remove(self._manifest_path(v))
                 removed_manifests += 1
         # columnar checkpoints die with their manifests; orphans from
         # LOST commit races (side-file written, manifest never landed)
@@ -1873,11 +1864,14 @@ class SnapTable:
         expected_parent: int | None = None,
         txn: tuple[str, int] | None = None,
     ) -> int:
-        """Stage data files, read their footer stats on the driver
-        (``_collect_stats``), then run the optimistic commit loop. Data
-        files are written with PHYSICAL column names (column mapping):
-        the incoming DataFrame carries logical names; renames here never
-        touch data on disk.
+        """Stage data files (``commit.stage``), read their footer stats
+        on the driver (``_collect_stats``), then run the optimistic
+        commit loop: move the files to their final names, claim the
+        manifest (``commit.claim``), and on a lost race act as the
+        contract in ``sources/commit.py`` says. Data files are written
+        with PHYSICAL column names (column mapping): the incoming
+        DataFrame carries logical names; renames here never touch data
+        on disk.
         ``layout_col`` names a LAYOUT-ONLY column of ``df`` (e.g. the
         z-cluster id): it drives the one-file-per-value split but is
         stripped from the written data and the schema.
@@ -1890,8 +1884,6 @@ class SnapTable:
         racer_version+1 with a STALE carry, silently dropping the
         racer's files (lost update). Checked before the version is
         claimed — same contract as ``_commit``."""
-        import shutil
-
         data_df = df.drop(layout_col) if layout_col else df
         self._validate_constraints(data_df)
         base_m = None if op == "create" else self.manifest()
@@ -1907,18 +1899,11 @@ class SnapTable:
         if layout_col:
             sel.append(F.col(layout_col))
         wdf = df.select(sel)
-        stage = os.path.join(
-            self.data_dir, f"_stage_{os.getpid()}_{id(df) & 0xFFFF:x}"
-        )
+        split_by = []
         if layout_col is not None:
             # one file per distinct layout value; partitionBy strips the
             # layout column from the written data
-            (
-                wdf.repartition(layout_col)
-                .write.mode("overwrite")
-                .partitionBy(layout_col)
-                .parquet(stage)
-            )
+            split_by = [layout_col]
         elif bucket_col is not None or partition_col is not None:
             # all rows of a (partition, bucket) pair land in one task
             # (hash on the keys) -> exactly one file per directory,
@@ -1926,134 +1911,114 @@ class SnapTable:
             # needed. SHADOWS of the layout columns drive partitionBy so
             # the real columns survive inside the data files
             # (partitionBy strips its columns into the directory name).
-            shadows, wdf2 = [], wdf
             for col, shadow in (
                 (partition_col, "__snap_part__"),
                 (bucket_col, "__snap_bucket__"),
             ):
                 if col is not None:
-                    wdf2 = wdf2.withColumn(
+                    wdf = wdf.withColumn(
                         shadow, F.col(phys_of.get(col, col))
                     )
-                    shadows.append(shadow)
-            (
-                wdf2.repartition(*shadows)
-                .write.mode("overwrite")
-                .partitionBy(*shadows)
-                .parquet(stage)
-            )
-        else:
-            w = wdf if n_out is None else wdf.repartition(max(1, n_out))
-            w.write.mode("overwrite").parquet(stage)
+                    split_by.append(shadow)
+        elif n_out is not None:
+            wdf = wdf.repartition(max(1, n_out))
 
-        # deterministic final names: v{version}-{i}.parquet, assigned in
-        # sorted stage order. Version unknown until the commit wins, so
-        # stage names are temporary until the rename step.
-        staged = []
-        for root_dir, _dirs, files in os.walk(stage):
-            for fn in sorted(files):
-                if fn.endswith(".parquet"):
-                    staged.append(os.path.join(root_dir, fn))
-        staged.sort()
-
-        file_stats = self._collect_stats(staged, stat_cols, bloom_cols)
-
-        # Writer-unique token in data file names (pid + per-process seq):
-        # two RACING writers must never address the same path — the
-        # manifest's exclusive create is the ONLY arbitration point, and
-        # data files are immutable once referenced. (Delta/Iceberg use
-        # GUID part names for exactly this reason.)
-        token = f"{os.getpid():x}-{next(_WRITER_SEQ):04x}"
-        while True:
-            version = self.latest_version() + 1
-            if txn is not None and version > 1:
-                # re-check idempotence against the CURRENT latest: a
-                # racing writer of the SAME app may have landed this
-                # batch while we were staging
-                cur_txns = self.manifest().get("txns", {})
-                if cur_txns.get(txn[0], -1) >= txn[1]:
-                    shutil.rmtree(stage, ignore_errors=True)
-                    return version - 1
-            if expected_parent is not None and version - 1 != expected_parent:
-                # a racer landed while we were staging: the carry set is
-                # stale even though the exclusive create would succeed
-                shutil.rmtree(stage, ignore_errors=True)
-                raise ConcurrentCommitError(
-                    f"snaptable {self.root}: {op} based on version "
-                    f"{expected_parent} but latest is {version - 1}; "
-                    f"re-read the table and retry"
+        # final names v{version}-{i}-{token}.parquet, assigned in the
+        # stage's sorted order. The version is unknown until the claim
+        # wins, so files move back to the stage after a lost race. The
+        # stage token makes the names writer-unique: racing writers
+        # never address the same path.
+        with commit.stage(wdf, self.data_dir, split_by) as (token, staged):
+            staged = [path for path, _hive in staged]
+            file_stats = self._collect_stats(staged, stat_cols, bloom_cols)
+            while True:
+                version = self.latest_version() + 1
+                if txn is not None and version > 1:
+                    # re-check idempotence against the CURRENT latest: a
+                    # racing writer of the SAME app may have landed this
+                    # batch while we were staging
+                    cur_txns = self.manifest().get("txns", {})
+                    if cur_txns.get(txn[0], -1) >= txn[1]:
+                        return version - 1
+                if (
+                    expected_parent is not None
+                    and version - 1 != expected_parent
+                ):
+                    # a racer landed while we were staging: the carry set
+                    # is stale even though the exclusive create would
+                    # succeed
+                    raise ConcurrentCommitError(
+                        f"snaptable {self.root}: {op} based on version "
+                        f"{expected_parent} but latest is {version - 1}; "
+                        f"re-read the table and retry"
+                    )
+                entries = []
+                moved = []
+                for i, (src, fstats) in enumerate(zip(staged, file_stats)):
+                    rel = os.path.join(
+                        _DATA_DIR, f"v{version:08d}-{i:05d}-{token}.parquet"
+                    )
+                    dst = os.path.join(self.root, rel)
+                    os.replace(src, dst)
+                    moved.append((dst, src))
+                    entries.append({"path": rel, **fstats})
+                if op != "create":
+                    # recompute evolution against the CURRENT latest (an
+                    # append retry may follow a racer's schema change);
+                    # our new columns' physicals are pinned to what we
+                    # wrote
+                    fields, retired = self._evolve_fields(
+                        data_df, self.manifest(), pinned
+                    )
+                txns = (
+                    {} if op == "create"
+                    else dict(self.manifest().get("txns", {}))
                 )
-            entries = []
-            moved = []
-            for i, (src, fstats) in enumerate(zip(staged, file_stats)):
-                rel = os.path.join(
-                    _DATA_DIR, f"v{version:08d}-{i:05d}-{token}.parquet"
+                if txn is not None:
+                    txns[txn[0]] = txn[1]
+                manifest = {
+                    "version": version,
+                    "parent": version - 1 if op != "create" else 0,
+                    "operation": op,
+                    "schema": self._logical_ddl(fields),
+                    "fields": fields,
+                    "retired": retired,
+                    "stat_cols": stat_cols,
+                    "bloom_cols": list(bloom_cols),
+                    "constraints": self._constraints(),
+                    "txns": txns,
+                }
+                part = partition_col or (base_m or {}).get("partition_col")
+                if part:
+                    manifest["partition_col"] = part
+                entry_fields = self._finalize_entries(
+                    version, carry, entries, stat_cols, bloom_cols
                 )
-                dst = os.path.join(self.root, rel)
-                os.replace(src, dst)
-                moved.append((dst, src))
-                entries.append({"path": rel, **fstats})
-            parent = version - 1
-            if op != "create":
-                # recompute evolution against the CURRENT latest (an
-                # append retry may follow a racer's schema change); our
-                # new columns' physicals are pinned to what we wrote
-                fields, retired = self._evolve_fields(
-                    data_df, self.manifest(), pinned
-                )
-            txns = (
-                {} if op == "create"
-                else dict(self.manifest().get("txns", {}))
-            )
-            if txn is not None:
-                txns[txn[0]] = txn[1]
-            manifest = {
-                "version": version,
-                "parent": parent if op != "create" else 0,
-                "operation": op,
-                "schema": self._logical_ddl(fields),
-                "fields": fields,
-                "retired": retired,
-                "stat_cols": stat_cols,
-                "bloom_cols": list(bloom_cols),
-                "constraints": self._constraints(),
-                "txns": txns,
-            }
-            part = partition_col or (base_m or {}).get("partition_col")
-            if part:
-                manifest["partition_col"] = part
-            entry_fields = self._finalize_entries(
-                version, carry, entries, stat_cols, bloom_cols
-            )
-            manifest.update(entry_fields)
-            if self._try_write_manifest(version, manifest):
-                shutil.rmtree(stage, ignore_errors=True)
-                return version
-            # lost the race: put files back on stage, drop our
-            # side-file for the lost version, then decide.
-            self._drop_ckpt(entry_fields)
-            for dst, src in moved:
-                os.replace(dst, src)
-            if op == "append":
-                # appends commute: rebase the carry list onto the new
-                # latest and retry.
-                carry = self._carry(self.manifest())
-            elif op == "create":
-                shutil.rmtree(stage, ignore_errors=True)
-                raise FileExistsError(
-                    f"snaptable {self.root}: concurrently created"
-                )
-            else:
-                # delete/merge/compact computed carry+rewrite against a
-                # manifest that is no longer latest; retrying would drop
-                # the winner's files (lost update). Fail loudly — the
-                # caller re-reads and re-issues (Delta's
-                # ConcurrentModificationException contract).
-                shutil.rmtree(stage, ignore_errors=True)
-                raise ConcurrentCommitError(
-                    f"snaptable {self.root}: {op} lost a commit race at "
-                    f"version {version}; re-read the table and retry"
-                )
+                manifest.update(entry_fields)
+                if self._claim(manifest):
+                    return version
+                # lost the race: drop our side-file for the lost
+                # version, put the files back on stage, then decide.
+                self._drop_ckpt(entry_fields)
+                for dst, src in moved:
+                    os.replace(dst, src)
+                if op == "append":
+                    # appends commute: rebase the carry list onto the
+                    # new latest and retry.
+                    carry = self._carry(self.manifest())
+                elif op == "create":
+                    raise FileExistsError(
+                        f"snaptable {self.root}: concurrently created"
+                    )
+                else:
+                    # delete/merge/compact computed carry+rewrite against
+                    # a manifest that is no longer latest; retrying
+                    # would drop the winner's files (lost update).
+                    raise ConcurrentCommitError(
+                        f"snaptable {self.root}: {op} lost a commit race "
+                        f"at version {version}; re-read the table and "
+                        f"retry"
+                    )
 
     def _commit(
         self, stat_cols, op, carry, entries,
@@ -2093,7 +2058,7 @@ class SnapTable:
             tuple(base.get("bloom_cols", [])),
         )
         manifest.update(entry_fields)
-        if self._try_write_manifest(version, manifest):
+        if self._claim(manifest):
             return version
         self._drop_ckpt(entry_fields)
         raise ConcurrentCommitError(
@@ -2101,15 +2066,13 @@ class SnapTable:
             f"version {version}; re-read the table and retry"
         )
 
-    def _try_write_manifest(self, version: int, manifest: dict) -> bool:
-        path = os.path.join(self.snap_dir, f"v{version:08d}.json")
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            return False  # another writer committed this version
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f, sort_keys=True)
-        return True
+    def _claim(self, manifest: dict) -> bool:
+        """Claim ``manifest``'s version: the exclusive create of its
+        JSON (``commit.claim``). False when a racer holds it."""
+        return commit.claim(
+            self._manifest_path(manifest["version"]),
+            json.dumps(manifest, sort_keys=True),
+        )
 
     def _evolve_fields(
         self, df: DataFrame, base_m: dict | None, pinned: dict | None = None

@@ -14,13 +14,9 @@ from pyspark.sql import functions as F
 
 from luxo_rs_spark.sources.deltalog import DeltaLog, DeltaProtocolError
 
-ROOT = "/tmp/luxo_deltalog_tests"
-
-
 @pytest.fixture()
-def root():
-    path = os.path.join(ROOT, "t")
-    shutil.rmtree(path, ignore_errors=True)
+def root(tmp_path):
+    path = str(tmp_path / "t")
     yield path
     shutil.rmtree(path, ignore_errors=True)
 

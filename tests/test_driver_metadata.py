@@ -30,18 +30,15 @@ from luxo_rs_spark.sources.registry import (
 )
 from luxo_rs_spark.sources.snaptable import SnapTable
 
-ROOT = "/tmp/luxo_driver_metadata_tests"
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "luxo_rs_spark"
 
 _UTC = datetime.timezone.utc
 
 
 @pytest.fixture()
-def root():
-    shutil.rmtree(ROOT, ignore_errors=True)
-    os.makedirs(ROOT)
-    yield ROOT
-    shutil.rmtree(ROOT, ignore_errors=True)
+def root(tmp_path):
+    yield str(tmp_path)
+    shutil.rmtree(tmp_path, ignore_errors=True)
 
 
 # -- local_frame ---------------------------------------------------------------

@@ -195,6 +195,28 @@ def test_iceberg_expire_retain_two_keeps_time_travel(spark, base):
         t.read(snapshot_id=s1)
 
 
+def test_iceberg_append_after_expire_keeps_every_acknowledged_row(
+    spark, base
+):
+    """Appends after an expiry take fresh snapshot ids and fresh file
+    names: an id derived from the (shrunken) snapshot count would reuse
+    a retained snapshot's id and overwrite its files, losing rows."""
+    root = os.path.join(base, "t")
+    t = IcebergTable(spark, root)
+    acked = []
+    for rows in ([0, 1], [10, 11], [20, 21], [30, 31]):
+        t.write(_mk(spark, rows))
+        acked += rows
+    t.expire_snapshots(retain_last=2)
+    for rows in ([100], [200]):
+        t.write(_mk(spark, rows))
+        acked += rows
+
+    ids = [s["snapshot-id"] for s in t.snapshots()]
+    assert len(ids) == len(set(ids)) == 4
+    assert sorted(r["k"] for r in t.read().collect()) == sorted(acked)
+
+
 # -- timestamp time travel ----------------------------------------------------
 
 

@@ -20,13 +20,9 @@ from luxo_rs_spark.sources.iceberg import (
     sv_encode,
 )
 
-ROOT = "/tmp/luxo_iceberg_tests"
-
-
 @pytest.fixture()
-def root():
-    path = os.path.join(ROOT, "t")
-    shutil.rmtree(path, ignore_errors=True)
+def root(tmp_path):
+    path = str(tmp_path / "t")
     yield path
     shutil.rmtree(path, ignore_errors=True)
 

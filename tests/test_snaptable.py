@@ -11,9 +11,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from luxo_rs_spark.sources import commit
 from luxo_rs_spark.sources.snaptable import SnapTable
-
-ROOT = "/tmp/luxo_snaptable_tests"
 
 
 def _mk(spark, name, rows, bucket_div=100):
@@ -24,11 +23,25 @@ def _mk(spark, name, rows, bucket_div=100):
 
 
 @pytest.fixture()
-def root():
-    path = os.path.join(ROOT, "t")
-    shutil.rmtree(path, ignore_errors=True)
+def root(tmp_path):
+    path = str(tmp_path / "t")
     yield path
     shutil.rmtree(path, ignore_errors=True)
+
+
+def _race_on_claim(monkeypatch, op, racer):
+    """Run ``racer()`` once, just before the first manifest claim of a
+    commit whose operation is ``op``: the racer wins that version."""
+    orig = commit.claim
+    state = {"fired": False}
+
+    def inject(path, text):
+        if not state["fired"] and json.loads(text)["operation"] == op:
+            state["fired"] = True
+            racer()
+        return orig(path, text)
+
+    monkeypatch.setattr(commit, "claim", inject)
 
 
 def test_create_layout_one_file_per_bucket_with_stats(spark, root):
@@ -125,22 +138,15 @@ def test_commit_race_loser_rebases_and_retries(spark, root, monkeypatch):
     t.create(_mk(spark, "t", range(100)), stat_cols=["k"], bucket_col="b")
 
     racer_df = _mk(spark, "t", range(1000, 1030))
-    orig = SnapTable._try_write_manifest
-    state = {"fired": False}
 
-    def inject(self, version, manifest):
-        if not state["fired"] and manifest["operation"] == "append":
-            state["fired"] = True
-            # a second writer wins version 2 first
-            racer = SnapTable(spark, self.root)
-            orig_create = racer._commit_new_files(
-                racer_df, ["k"], "b", op="append",
-                carry=racer.manifest()["files"],
-            )
-            assert orig_create == 2
-        return orig(self, version, manifest)
+    def racer():
+        # a second writer wins version 2 first
+        r = SnapTable(spark, root)
+        assert r._commit_new_files(
+            racer_df, ["k"], "b", op="append", carry=r.manifest()["files"],
+        ) == 2
 
-    monkeypatch.setattr(SnapTable, "_try_write_manifest", inject)
+    _race_on_claim(monkeypatch, "append", racer)
     v = t.append(_mk(spark, "t", range(100, 120)), bucket_col="b")
     assert v == 3  # lost version 2, rebased, landed on 3
     # both writers' rows are present: appends commute
@@ -175,7 +181,7 @@ def test_manifest_is_timestamp_free_and_deterministic(spark, root):
     }
     # rebuilding the same table yields the identical manifest up to the
     # writer-unique file tokens (stats, rows, bytes, schema all equal)
-    other = os.path.join(ROOT, "t2")
+    other = os.path.join(os.path.dirname(root), "t2")
     shutil.rmtree(other, ignore_errors=True)
     try:
         t2 = SnapTable(spark, other)
@@ -520,7 +526,7 @@ def test_streaming_merge_equals_batch_merge(spark, root):
         q.awaitTermination(120)
 
         # batch twin on a second table
-        other = os.path.join(ROOT, "t_batch")
+        other = os.path.join(os.path.dirname(root), "t_batch")
         shutil.rmtree(other, ignore_errors=True)
         tb = SnapTable(spark, other)
         tb.create(base, stat_cols=["k"], bucket_col="b")
@@ -668,17 +674,10 @@ def test_non_append_commit_race_raises_no_lost_update(
     t.create(_mk(spark, "t", range(300)), stat_cols=["k"], bucket_col="b")
 
     racer_df = _mk(spark, "t", range(1000, 1020))
-    orig = SnapTable._try_write_manifest
-    state = {"fired": False}
-
-    def inject(self, version, manifest):
-        if not state["fired"] and manifest["operation"] == "delete":
-            state["fired"] = True
-            racer = SnapTable(spark, self.root)
-            racer.append(racer_df, bucket_col="b")
-        return orig(self, version, manifest)
-
-    monkeypatch.setattr(SnapTable, "_try_write_manifest", inject)
+    _race_on_claim(
+        monkeypatch, "delete",
+        lambda: SnapTable(spark, root).append(racer_df, bucket_col="b"),
+    )
     with pytest.raises(ConcurrentCommitError):
         t.delete_where("k", 0, 99)
     # the racer's append is intact — nothing was lost
@@ -699,16 +698,10 @@ def test_metadata_only_commit_race_raises(spark, root, monkeypatch):
     t.create(_mk(spark, "t", range(100)), stat_cols=["k"], bucket_col="b")
 
     racer_df = _mk(spark, "t", range(1000, 1010))
-    orig = SnapTable._try_write_manifest
-    state = {"fired": False}
-
-    def inject(self, version, manifest):
-        if not state["fired"] and manifest["operation"] == "delete":
-            state["fired"] = True
-            SnapTable(spark, self.root).append(racer_df, bucket_col="b")
-        return orig(self, version, manifest)
-
-    monkeypatch.setattr(SnapTable, "_try_write_manifest", inject)
+    _race_on_claim(
+        monkeypatch, "delete",
+        lambda: SnapTable(spark, root).append(racer_df, bucket_col="b"),
+    )
     # k in [5000, 6000] matches nothing -> fully pruned, metadata-only
     with pytest.raises(ConcurrentCommitError):
         t.delete_where("k", 5000, 6000)
@@ -893,18 +886,12 @@ def test_columnar_append_race_rebases_and_cleans_side_file(
     t = SnapTable(spark, root, checkpoint_threshold=1)
     t.create(_mk(spark, "t", range(100)), stat_cols=["k"], bucket_col="b")
 
-    orig = SnapTable._try_write_manifest
-    state = {"fired": False}
-
-    def inject(self, version, manifest):
-        if not state["fired"] and manifest["operation"] == "append":
-            state["fired"] = True
-            SnapTable(spark, self.root, checkpoint_threshold=1).append(
-                _mk(spark, "t", range(500, 520)), bucket_col="b"
-            )
-        return orig(self, version, manifest)
-
-    monkeypatch.setattr(SnapTable, "_try_write_manifest", inject)
+    _race_on_claim(
+        monkeypatch, "append",
+        lambda: SnapTable(spark, root, checkpoint_threshold=1).append(
+            _mk(spark, "t", range(500, 520)), bucket_col="b"
+        ),
+    )
     v = t.append(_mk(spark, "t", range(100, 140)), bucket_col="b")
     assert v == 3
     assert t.read().count() == 160
@@ -1384,18 +1371,12 @@ def test_deletion_vector_lost_race_raises_and_cleans(spark, root, monkeypatch):
     t = SnapTable(spark, root)
     t.create(_mk(spark, "t", range(100)), stat_cols=["k"], bucket_col="b")
 
-    orig = SnapTable._try_write_manifest
-    state = {"fired": False}
-
-    def inject(self, version, manifest):
-        if not state["fired"] and manifest["operation"] == "delete_dv":
-            state["fired"] = True
-            SnapTable(spark, self.root).append(
-                _mk(spark, "t", range(500, 510)), bucket_col="b"
-            )
-        return orig(self, version, manifest)
-
-    monkeypatch.setattr(SnapTable, "_try_write_manifest", inject)
+    _race_on_claim(
+        monkeypatch, "delete_dv",
+        lambda: SnapTable(spark, root).append(
+            _mk(spark, "t", range(500, 510)), bucket_col="b"
+        ),
+    )
     with pytest.raises(ConcurrentCommitError):
         t.delete_where("k", 0, 9, mode="dv")
     # racer intact, orphan DV cleaned
@@ -1581,7 +1562,7 @@ def test_stage_window_race_raises_before_claiming_version(
 
     def inject(self, paths, stat_cols, bloom_cols=()):
         # fires between the stage write and the commit loop — the
-        # window the _try_write_manifest injection never reaches
+        # window the commit.claim injection never reaches
         if not state["fired"]:
             state["fired"] = True
             SnapTable(spark, self.root).append(racer_df, bucket_col="b")

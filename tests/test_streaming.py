@@ -882,24 +882,14 @@ def test_trending_items_mg_guarantees(spark):
     shutil.rmtree(base, ignore_errors=True)
 
 
-@pytest.mark.parametrize("backend", ["parquet", "delta"])
-def test_versioned_table_time_travel_and_vacuum(spark, backend):
-    """The TableFormat contract, identical across backends (round-2
-    verdict item #8): every commit is a queryable snapshot carrying its
-    batch id; time travel reads an old version; vacuum drops all but
-    the newest N and time travel to a dropped version raises. The
-    delta-rs backend runs whenever the package is installed and skips
-    otherwise (absent in this container)."""
-    import pytest as _pytest
+def test_versioned_table_time_travel_and_vacuum(spark):
+    """Every commit is a queryable snapshot carrying its batch id;
+    time travel reads an old version; vacuum drops all but the newest
+    N and time travel to a dropped version raises."""
+    from luxo_rs_spark.streaming.sinks import VersionedParquetTable
 
-    from luxo_rs_spark.streaming.table_format import TableFormat, open_table
-
-    if backend == "delta":
-        _pytest.importorskip("deltalake")
-
-    base = TMP / f"ttravel_{backend}_{uuid.uuid4().hex[:8]}"
-    t = open_table(str(base), backend)
-    assert isinstance(t, TableFormat)
+    base = TMP / f"ttravel_{uuid.uuid4().hex[:8]}"
+    t = VersionedParquetTable(str(base))
     assert t.current_version() == -1 and t.last_batch_id() == -1
     assert t.read(spark) is None
     df1 = spark.range(3).withColumnRenamed("id", "k")
@@ -912,32 +902,9 @@ def test_versioned_table_time_travel_and_vacuum(spark, backend):
     dropped = t.vacuum(keep_last=1)
     assert dropped == [0]
     assert t.read(spark).count() == 5  # published version untouched
-    if backend == "parquet":
-        with _pytest.raises(FileNotFoundError):
-            t.read(spark, version=0)
-    else:
-        # delta-rs retention is time-based, not version-count-based:
-        # keep_last > 1 must refuse loudly, not silently under-retain
-        with _pytest.raises(ValueError, match="keep_last=1"):
-            t.vacuum(keep_last=2)
+    with pytest.raises(FileNotFoundError):
+        t.read(spark, version=0)
     shutil.rmtree(base, ignore_errors=True)
-
-
-def test_delta_history_batch_id_layouts():
-    """parse_history_batch_id must accept every layout delta-rs has
-    shipped: userMetadata as a JSON dict string, batch_id merged
-    top-level as a bare string ('3' — json.loads yields an int, the
-    round-3 advice crash), as a bare int, plus garbage -> -1."""
-    from luxo_rs_spark.streaming.table_format import parse_history_batch_id
-
-    assert parse_history_batch_id({"userMetadata": '{"batch_id": "7"}'}) == 7
-    assert parse_history_batch_id({"userMetadata": '{"batch_id": 7}'}) == 7
-    assert parse_history_batch_id({"batch_id": "3"}) == 3  # bare string
-    assert parse_history_batch_id({"batch_id": 3}) == 3  # bare int
-    assert parse_history_batch_id({}) == -1
-    assert parse_history_batch_id({"userMetadata": "not json"}) == -1
-    assert parse_history_batch_id({"userMetadata": '{"other": 1}'}) == -1
-    assert parse_history_batch_id({"batch_id": "[1]"}) == -1
 
 
 @pytest.mark.slow

@@ -111,11 +111,11 @@ def main() -> None:
 
         # representation A: inline JSON (legacy; threshold above n)
         tj = SnapTable(spark, root_json, checkpoint_threshold=10 * n)
-        tj._try_write_manifest(1, dict(base, files=entries))
+        tj._claim(dict(base, files=entries))
         # representation B: columnar checkpoint
         tc = SnapTable(spark, root_ckpt, checkpoint_threshold=1)
         fields = tc._finalize_entries(1, [], entries, ["k"], ())
-        tc._try_write_manifest(1, dict(base, **fields))
+        tc._claim(dict(base, **fields))
 
         # the probe: a range hitting ~50 of n files
         lo, hi = (n // 2) * 1000, (n // 2 + 50) * 1000 - 1
@@ -160,7 +160,7 @@ def main() -> None:
             m = tj.manifest()
             f = tj._finalize_entries(2, m["files"], new, ["k"], ())
             # inline path returns the would-be manifest field; writing
-            # the JSON itself is charged to _try_write_manifest below
+            # the JSON itself is charged to _claim below
             blob = json.dumps(dict(base, **f), sort_keys=True)
             return len(blob)
 
