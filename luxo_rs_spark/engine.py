@@ -8,9 +8,9 @@ query", src/main.rs:3). The Spark-first equivalent of that intent:
 - session bootstrap with scale-sane defaults (AQE on, skew-join handling,
   Arrow for pandas UDFs, pinned UTC timezone for deterministic time math)
 - a catalog veneer that registers the fixture tables as views
-- first-class explainability: ``explain()`` / ``light()`` log the
-  optimized plan and per-query wall time, standing in for the
-  reference's per-event file:line tracing (src/main.rs:14-19)
+- first-class explainability: ``explain_str()`` / ``plan_report()``
+  render and audit the physical plan, standing in for the reference's
+  per-event file:line tracing (src/main.rs:14-19)
 
 Scale notes (100 TB / 1000 executors): the configs below are expressed as
 ratios, not absolutes — ``shuffle.partitions`` is sized for local[32] test
@@ -21,9 +21,7 @@ Nothing in the engine holds driver-side data.
 
 from __future__ import annotations
 
-import logging
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -34,8 +32,6 @@ from luxo_rs_spark.sources.registry import (
     load_table,
     register_views,
 )
-
-logger = logging.getLogger("luxo_rs_spark")
 
 
 def _driver_memory() -> str:
@@ -274,20 +270,6 @@ class Engine:
         return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
             df._jdf.queryExecution(), mode
         )
-
-    def light(self, df: DataFrame, label: str = "query") -> DataFrame:
-        """Log optimized plan + wall time on materialization (R5
-        analogue). The frame is cached before the counting action so a
-        caller that then writes/collects the result reads the cached
-        blocks instead of paying a second full execution; callers
-        holding very large results can `.unpersist()` when done."""
-        plan = self.explain_str(df)
-        df = df.cache()
-        t0 = time.perf_counter()
-        n = df.count()
-        dt = time.perf_counter() - t0
-        logger.info("[%s] rows=%d wall=%.3fs\n%s", label, n, dt, plan)
-        return df
 
     def plan_report(self, df: DataFrame, executed: bool = False) -> dict:
         """Structured plan audit (the 'sheds light on any query'

@@ -38,7 +38,11 @@ from pyspark.sql import Column, DataFrame
 def spread(df: DataFrame, *keys: str | Column) -> DataFrame:
     """Repartition ``df`` to ``defaultParallelism`` — only when it has
     fewer partitions than that (single-file fixture scans); hash-keyed
-    on ``keys`` when given, round-robin otherwise."""
+    on ``keys`` when given, round-robin otherwise. A streaming frame
+    is returned unchanged and never probed: it has no RDD to count
+    partitions on, and its source decides each micro-batch's split."""
+    if df.isStreaming:
+        return df
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= par:
         return df

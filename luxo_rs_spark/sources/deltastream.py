@@ -5,14 +5,12 @@ over the from-scratch protocol reader (sources/deltalog.py) — no
 delta-spark, no deltalake wheel.
 
 Semantics mirror Spark's own Delta streaming source (public
-delta.io PROTOCOL.md semantics; parity target
-reference/src/main.rs:12-22 is only the engine bootstrap — the
-streaming surface itself is SURVEY §2.2-A/§2.2-I ground):
+delta.io PROTOCOL.md semantics):
 
-- The OFFSET IS THE LOG VERSION. A micro-batch delivers the rows of
-  ``add`` actions with ``dataChange`` true committed in
-  ``(start, end]``; offsets replay deterministically because commit
-  files are immutable.
+- The OFFSET IS THE LOG VERSION (``{"v": n, "snapshot": b}``). A
+  micro-batch delivers the rows of ``add`` actions with
+  ``dataChange`` true committed in ``(start, end]``; offsets replay
+  deterministically because commit files are immutable.
 - The FIRST batch is the full live snapshot at the then-latest
   version (Delta's default start point), unless
   ``.option("startingVersion", N)`` asks for the commit walk from
@@ -27,16 +25,18 @@ streaming surface itself is SURVEY §2.2-A/§2.2-I ground):
   ``.option("skipChangeCommits", "true")`` skips any row-changing
   commit entirely (both are the Delta option names, with the Delta
   meanings).
-- Column mapping ('name' mode) and deletion vectors on delivered
-  adds are honored exactly as in the batch reader: files are read by
-  PHYSICAL name and aliased back; a DV add delivers only live rows.
+- ``.option("readChangeFeed", "true")`` streams the row-level diff
+  between versions instead (``readpath.ChangeFeedReader``; a file's
+  delete identity is its deletion-vector descriptor).
 
-Scale design: micro-batch PLANNING is driver-side metadata work
-(bounded by commit-file size, like every Delta client); row READING
-is executor-side — ``partitions()`` ships one ``InputPartition`` per
-data file and ``read()`` opens the parquet with pyarrow on the
-worker, so batch throughput scales with the cluster exactly like the
-batch DataSource (sources/snapsource.py, the house pattern).
+This module holds only what is Delta-specific: the offset planner
+(which commits a batch delivers, and the gates above) and how an
+``add`` resolves its columns (physical names in 'name' mode, parquet
+field ids in 'id' mode, typed partition literals) and deletes (its
+deletion vector, decoded on the driver). Planning is driver-side
+metadata work bounded by commit-file size; rows are read on the
+executors by the shared reader (sources/readpath.py), one partition
+per data file.
 """
 
 from __future__ import annotations
@@ -44,18 +44,19 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource
 from pyspark.sql import types as T
 
 from luxo_rs_spark.sources.deltalog import (
     DeltaLog,
     DeltaProtocolError,
     _LOG_DIR,
+)
+from luxo_rs_spark.sources.readpath import (
+    ChangeFeedReader,
+    FilePartition,
+    TailReader,
+    flag,
 )
 
 
@@ -92,30 +93,39 @@ def _typed_partition_value(raw: str | None, dt: T.DataType):
     )
 
 
-class _DeltaFilePartition(InputPartition):
-    """One data file of one micro-batch. ``columns`` is aligned to
-    the stream schema: ("data", physical_name) reads the parquet
-    column; ("part", value) injects the driver-typed partition
-    literal. ``dead`` is the file's decoded deletion-vector positions
-    (tuple; empty for DV-less files)."""
+def _partition(log: DeltaLog, s: dict, fields: list[T.StructField],
+               a: dict) -> FilePartition:
+    """One ``add`` under snapshot ``s``: partition columns become typed
+    literals, data columns resolve per file (physicalName or parquet
+    field id; None = the file predates the column), and the add's
+    deletion vector is decoded into dead positions."""
+    pcols = set(s["partition_columns"])
+    phys_of = log._phys_of(s)
+    path = os.path.join(log.root, a["path"])
+    res = iter(log._file_column_resolution(
+        path, s, [f.name for f in fields if f.name not in pcols]
+    ))
+    pv = a.get("partitionValues") or {}
+    columns = [
+        ("lit", _typed_partition_value(
+            pv.get(phys_of.get(f.name, f.name)), f.dataType
+        ))
+        if f.name in pcols
+        else ("col", next(res))
+        for f in fields
+    ]
+    dvd = a.get("deletionVector")
+    return FilePartition(
+        path, columns, dead=log._dv_positions(dvd) if dvd else ()
+    )
 
-    def __init__(self, abs_path: str, columns: list[tuple],
-                 dead: tuple):
-        self.abs_path = abs_path
-        self.columns = columns
-        self.dead = dead
 
-
-class _DeltaStreamReader(DataSourceStreamReader):
+class _DeltaTail(TailReader):
     def __init__(self, options, schema: T.StructType):
         self.root = options["path"]
         self.schema = schema
-        self.skip_change = (
-            str(options.get("skipchangecommits", "")).lower() == "true"
-        )
-        self.ignore_deletes = (
-            str(options.get("ignoredeletes", "")).lower() == "true"
-        )
+        self.skip_change = flag(options, "skipchangecommits")
+        self.ignore_deletes = flag(options, "ignoredeletes")
         sv = options.get("startingversion")
         # offset v = newest version already delivered; -1 with
         # snapshot=True means "nothing yet: first batch is the live
@@ -127,8 +137,6 @@ class _DeltaStreamReader(DataSourceStreamReader):
             self._initial = {"v": int(sv) - 1, "snapshot": False}
         self._log = DeltaLog(None, self.root)
 
-    # -- offsets ------------------------------------------------------------
-
     def initialOffset(self) -> dict:
         return dict(self._initial)
 
@@ -139,11 +147,6 @@ class _DeltaStreamReader(DataSourceStreamReader):
                 f"delta table {self.root}: no log to stream"
             )
         return {"v": vs[-1], "snapshot": False}
-
-    def commit(self, end: dict) -> None:
-        pass  # commit files are immutable; nothing to release
-
-    # -- batch planning (driver-side metadata work) -------------------------
 
     def _commit_actions(self, v: int) -> list[dict]:
         path = os.path.join(
@@ -192,207 +195,49 @@ class _DeltaStreamReader(DataSourceStreamReader):
             out.extend(adds)
         return out
 
-    def partitions(self, start: dict, end: dict):
+    def plan(self, start: dict, end: dict) -> list[FilePartition]:
         adds = self._batch_adds(start, end)
         if not adds:
-            return [_DeltaFilePartition("", [], ())]
+            return []
         # schema / column mapping / partition typing resolved at the
         # batch's END snapshot (the stream's analyzed schema — the
         # Delta source behavior under metadata evolution)
         s = self._log.snapshot(int(end["v"]))
-        phys_of = self._log._phys_of(s)
-        pcols = set(s["partition_columns"])
-        data_names = [
-            f.name for f in self.schema.fields if f.name not in pcols
+        return [
+            _partition(self._log, s, self.schema.fields, a) for a in adds
         ]
-        parts = []
-        for a in adds:
-            pv = a.get("partitionValues") or {}
-            # per-file resolution: physicalName ('name' mode) or
-            # parquet field id ('id' mode); None = file predates col
-            res = iter(self._log._file_column_resolution(
-                os.path.join(self.root, a["path"]), s, data_names
-            ))
-            columns: list[tuple] = []
-            for f in self.schema.fields:
-                if f.name in pcols:
-                    columns.append((
-                        "part",
-                        _typed_partition_value(
-                            pv.get(phys_of.get(f.name, f.name)),
-                            f.dataType,
-                        ),
-                    ))
-                else:
-                    columns.append(("data", next(res)))
-            dvd = a.get("deletionVector")
-            dead = (
-                tuple(self._log._dv_positions(dvd)) if dvd else ()
-            )
-            parts.append(_DeltaFilePartition(
-                os.path.join(self.root, a["path"]), columns, dead
-            ))
-        return parts
-
-    # -- row reading (executor-side) ----------------------------------------
-
-    def read(self, partition: _DeltaFilePartition):
-        if not partition.abs_path:
-            return iter(())
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(partition.abs_path)
-        n = tbl.num_rows
-        cols = []
-        for kind, spec in partition.columns:
-            if kind == "part":
-                cols.append([spec] * n)
-            elif spec in tbl.column_names:
-                cols.append(tbl.column(spec).to_pylist())
-            else:
-                cols.append([None] * n)  # add-column evolution
-        dead = set(partition.dead)
-        return (
-            tuple(col[i] for col in cols)
-            for i in range(n)
-            if i not in dead
-        )
 
 
-def _freeze(v):
-    """Hashable stand-in for a row value (the snaptable CDF tail's
-    tag-wrapping — pyarrow yields lists/dicts for array/map cells,
-    which cannot key a Counter)."""
-    if isinstance(v, list):
-        return ("__dl_list__", tuple(_freeze(x) for x in v))
-    if isinstance(v, dict):
-        return ("__dl_map__", tuple(sorted(
-            (k, _freeze(x)) for k, x in v.items()
-        )))
-    if isinstance(v, tuple):
-        return tuple(_freeze(x) for x in v)
-    return v
+def _file_key(a: dict) -> tuple:
+    dv = a.get("deletionVector") or {}
+    return (a["path"], dv.get("pathOrInlineDv", ""), dv.get("offset"))
 
 
-def _thaw(v):
-    if isinstance(v, tuple) and len(v) == 2 and v[0] == "__dl_list__":
-        return [_thaw(x) for x in v[1]]
-    if isinstance(v, tuple) and len(v) == 2 and v[0] == "__dl_map__":
-        return {k: _thaw(x) for k, x in v[1]}
-    if isinstance(v, tuple):
-        return tuple(_thaw(x) for x in v)
-    return v
-
-
-class _DeltaCDFStreamReader(SimpleDataSourceStreamReader):
-    """Change-feed tail (``.option("readChangeFeed", "true")`` — the
-    Delta CDF streaming shape) over a FOREIGN log: each micro-batch
-    is the ROW-LEVEL multiset diff between the committed version and
-    the current latest, every row tagged ``change_type`` 'insert' or
-    'delete' (a CoW update surfaces as the delete+insert pair, an
-    OPTIMIZE nets to zero). File identity is (path, DV descriptor),
-    so files unchanged on both sides are NEVER read; each side reads
-    under ITS OWN snapshot state (column mapping / DV application) —
-    the batch ``DeltaLog.changes`` semantics, streamed. Driver-side
-    at micro-batch granularity (the Simple reader contract, same as
-    the snaptable CDF tail); the partition-parallel path is the
-    non-CDF reader above."""
+class _DeltaChangeFeed(ChangeFeedReader):
+    """Change feed over a foreign log: the batch ``DeltaLog.changes``
+    semantics, streamed. Offset ``{"v": -1}`` is before v0, so the
+    first batch is every live row as an insert."""
 
     def __init__(self, options, schema: T.StructType):
-        self.root = options["path"]
         # schema = (change_type, *table columns)
         self.fields = list(schema.fields[1:])
-        self._log = DeltaLog(None, self.root)
+        self._log = DeltaLog(None, options["path"])
 
-    def initialOffset(self):
-        return {"v": -1}  # before v0: first batch = all live rows
+    def initialOffset(self) -> dict:
+        return {"v": -1}
 
-    def _adds_by_key(self, s: dict | None) -> dict:
-        if s is None:
-            return {}
-
-        def key(a: dict):
-            dv = a.get("deletionVector") or {}
-            return (a["path"], dv.get("pathOrInlineDv", ""),
-                    dv.get("offset"))
-
-        return {key(a): a for a in s["adds"].values()}
-
-    def _file_rows(self, s: dict, a: dict):
-        import pyarrow.parquet as pq
-
-        pcols = set(s["partition_columns"])
-        phys_of = self._log._phys_of(s)
-        data_fields = [f for f in self.fields if f.name not in pcols]
-        ap = os.path.join(self.root, a["path"])
-        res = dict(zip(
-            (f.name for f in data_fields),
-            self._log._file_column_resolution(
-                ap, s, [f.name for f in data_fields]
-            ),
-        ))
-        tbl = pq.read_table(ap)
-        n = tbl.num_rows
-        pv = a.get("partitionValues") or {}
-        cols = []
-        for f in self.fields:
-            if f.name in pcols:
-                cols.append([_typed_partition_value(
-                    pv.get(phys_of.get(f.name, f.name)), f.dataType
-                )] * n)
-            else:
-                phys = res.get(f.name)
-                if phys and phys in tbl.column_names:
-                    cols.append(tbl.column(phys).to_pylist())
-                else:
-                    cols.append([None] * n)
-        dvd = a.get("deletionVector")
-        dead = set(self._log._dv_positions(dvd)) if dvd else ()
-        for i in range(n):
-            if i in dead:
-                continue
-            yield tuple(col[i] for col in cols)
-
-    def _diff_rows(self, v_from: int, v_to: int):
-        from collections import Counter
-
-        if v_to <= v_from:
-            return iter([])  # list-backed: Spark copy()s the iterator
-        s_from = self._log.snapshot(v_from) if v_from >= 0 else None
-        s_to = self._log.snapshot(v_to)
-        kf = self._adds_by_key(s_from)
-        kt = self._adds_by_key(s_to)
-
-        def side(s, own, other):
-            c: Counter = Counter()
-            for k, a in own.items():
-                if k in other:
-                    continue  # unchanged file: cancels unread
-                for r in self._file_rows(s, a):
-                    c[tuple(_freeze(v) for v in r)] += 1
-            return c
-
-        added = side(s_to, kt, kf)
-        removed = side(s_from, kf, kt) if s_from else Counter()
-        out = []
-        for r, n in (added - removed).items():
-            out.extend(
-                [("insert",) + tuple(_thaw(v) for v in r)] * n
-            )
-        for r, n in (removed - added).items():
-            out.extend(
-                [("delete",) + tuple(_thaw(v) for v in r)] * n
-            )
-        return iter(out)
-
-    def read(self, start):
+    def latest(self) -> int:
         vs = self._log.versions()
-        cur = vs[-1] if vs else -1
-        return self._diff_rows(int(start["v"]), cur), {"v": cur}
+        return vs[-1] if vs else -1
 
-    def readBetweenOffsets(self, start, end):
-        # deterministic replay: commit files are immutable
-        return self._diff_rows(int(start["v"]), int(end["v"]))
+    def files(self, v: int):
+        if v < 0:
+            return None, {}
+        s = self._log.snapshot(v)
+        return s, {_file_key(a): a for a in s["adds"].values()}
+
+    def partition(self, s: dict, a: dict) -> FilePartition:
+        return _partition(self._log, s, self.fields, a)
 
 
 class DeltaStreamDataSource(DataSource):
@@ -405,14 +250,9 @@ class DeltaStreamDataSource(DataSource):
     def name(cls):
         return "deltastream"
 
-    def _cdf(self) -> bool:
-        return str(
-            self.options.get("readchangefeed", "")
-        ).lower() == "true"
-
     def schema(self):
         s = DeltaLog(None, self.options["path"]).snapshot()
-        if self._cdf():
+        if flag(self.options, "readchangefeed"):
             return T.StructType(
                 [T.StructField("change_type", T.StringType(), False)]
                 + list(s["schema"].fields)
@@ -420,21 +260,13 @@ class DeltaStreamDataSource(DataSource):
         return s["schema"]
 
     def streamReader(self, schema):
-        if self._cdf():
-            # routes Spark's reader lookup to simpleStreamReader —
-            # the documented fallback protocol
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={
-                    "feature": "streamReader with readChangeFeed"
-                },
-            )
-        return _DeltaStreamReader(self.options, schema)
+        if flag(self.options, "readchangefeed"):
+            # NOT_IMPLEMENTED routes Spark to simpleStreamReader
+            return super().streamReader(schema)
+        return _DeltaTail(self.options, schema)
 
     def simpleStreamReader(self, schema):
-        return _DeltaCDFStreamReader(self.options, schema)
+        return _DeltaChangeFeed(self.options, schema)
 
 
 def register(spark) -> None:

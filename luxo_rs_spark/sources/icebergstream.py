@@ -27,28 +27,27 @@ semantics; the snapshot ``summary.operation`` drives eligibility):
   partition struct; position/equality delete files applicable to a
   delivered data file are applied on the EXECUTOR during the read.
 
-Scale design: batch planning is driver-side metadata (linear in
-manifests, like the batch reader — the migration-period interop
-plane; tools/foreign_plan_bench.py measures it); row reading ships
-one ``InputPartition`` per data file and opens parquet on the
-worker, the same executor-side contract as sources/deltastream.py.
+This module holds only what is Iceberg-specific: the offset planner
+(which snapshots a batch delivers, and the gates above) and how a data
+file resolves its columns (by parquet field id, so renames are
+metadata-only; partition literals from the manifest) and deletes
+(position-delete files keyed by ``file_path``, equality-delete specs).
+Planning is driver-side metadata work linear in manifests
+(tools/foreign_plan_bench.py measures it); rows are read on the
+executors by the shared reader (sources/readpath.py), one partition
+per data file.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource
 from pyspark.sql import types as T
 
 from luxo_rs_spark.sources.iceberg import (
     IcebergProtocolError,
     IcebergTable,
 )
+from luxo_rs_spark.sources.readpath import FilePartition, TailReader, flag
 
 
 def _datatype_of(iceberg_type: str) -> T.DataType:
@@ -84,36 +83,15 @@ def _stream_schema(t: IcebergTable) -> T.StructType:
     ])
 
 
-class _IcebergFilePartition(InputPartition):
-    """One data file of one micro-batch. ``columns`` aligns to the
-    stream schema: ("data", name) reads the parquet column, ("part",
-    value) injects the manifest's typed partition literal.
-    ``pos_deletes`` are applicable position-delete parquet paths;
-    ``eq_deletes`` are (path, [(logical name, delete-file physical
-    name)]) equality-delete specs, both applied executor-side."""
-
-    def __init__(self, abs_path: str, columns: list[tuple],
-                 pos_deletes: list[str],
-                 eq_deletes: list[tuple]):
-        self.abs_path = abs_path
-        self.columns = columns
-        self.pos_deletes = pos_deletes
-        self.eq_deletes = eq_deletes
-
-
-class _IcebergStreamReader(DataSourceStreamReader):
+class _IcebergTail(TailReader):
     def __init__(self, options, schema: T.StructType):
         self.root = options["path"]
         self.schema = schema
-        self.skip_deletes = (
-            str(options.get(
-                "streaming-skip-delete-snapshots", ""
-            )).lower() == "true"
+        self.skip_deletes = flag(
+            options, "streaming-skip-delete-snapshots"
         )
-        self.skip_overwrites = (
-            str(options.get(
-                "streaming-skip-overwrite-snapshots", ""
-            )).lower() == "true"
+        self.skip_overwrites = flag(
+            options, "streaming-skip-overwrite-snapshots"
         )
         sv = options.get("startingsequence")
         if sv is None:
@@ -121,8 +99,6 @@ class _IcebergStreamReader(DataSourceStreamReader):
         else:
             self._initial = {"seq": int(sv) - 1, "snapshot": False}
         self._t = IcebergTable(None, self.root)
-
-    # -- offsets ------------------------------------------------------------
 
     def initialOffset(self) -> dict:
         return dict(self._initial)
@@ -133,11 +109,6 @@ class _IcebergStreamReader(DataSourceStreamReader):
             "seq": int(md.get("last-sequence-number", 0)),
             "snapshot": False,
         }
-
-    def commit(self, end: dict) -> None:
-        pass  # metadata versions are immutable; nothing to release
-
-    # -- batch planning (driver-side metadata work) -------------------------
 
     def _lineage(self, md: dict) -> list[dict]:
         return sorted(
@@ -229,107 +200,53 @@ class _IcebergStreamReader(DataSourceStreamReader):
             prev_paths = {fl["path"] for fl in files}
         return md, out
 
-    def partitions(self, start: dict, end: dict):
+    def plan(self, start: dict, end: dict) -> list[FilePartition]:
         md, files = self._batch_files(start, end)
         if not files:
-            return [_IcebergFilePartition("", [], [], [])]
+            return []
         pcols = set(self._t._partition_names(md))
         fields_meta = self._t._schema_fields(md)
         name_of_id = {sf["id"]: sf["name"] for sf in fields_meta}
         id_of_name = {sf["name"]: sf["id"] for sf in fields_meta}
+        index_of = {f.name: i for i, f in enumerate(self.schema.fields)}
+        # schema evolution: columns resolve BY PARQUET FIELD ID
+        # (renames metadata-only; None = file predates the column)
+        data_meta = [
+            {"id": id_of_name[f.name], "name": f.name}
+            for f in self.schema.fields if f.name not in pcols
+        ]
         parts = []
         for fl in files:
-            abs_path = self._t._abs(fl["path"])
-            # schema evolution: columns resolve BY PARQUET FIELD ID
-            # (renames metadata-only; None = file predates the column)
-            data_meta = [
-                {"id": id_of_name[f.name], "name": f.name}
-                for f in self.schema.fields if f.name not in pcols
+            path = self._t._abs(fl["path"])
+            res = iter(self._t._file_column_resolution(path, data_meta))
+            columns = [
+                ("lit", fl["partition"].get(f.name))
+                if f.name in pcols
+                else ("col", next(res))
+                for f in self.schema.fields
             ]
-            res = iter(self._t._file_column_resolution(
-                abs_path, data_meta
-            ))
-            columns: list[tuple] = []
-            for f in self.schema.fields:
-                if f.name in pcols:
-                    columns.append(
-                        ("part", fl["partition"].get(f.name))
-                    )
-                else:
-                    columns.append(("data", next(res)))
-            eq_specs = []
+            eq_deletes = []
             for p, ids in (fl.get("eq_deletes") or ()):
                 dp = self._t._abs(p)
                 logical = [name_of_id[i] for i in ids]
                 dres = self._t._file_column_resolution(
                     dp,
-                    [
-                        {"id": i, "name": c}
-                        for i, c in zip(ids, logical)
-                    ],
+                    [{"id": i, "name": c} for i, c in zip(ids, logical)],
                 )
-                eq_specs.append((dp, [
-                    (c, phys if phys else c)
+                eq_deletes.append((dp, [
+                    (index_of[c], phys if phys else c)
                     for c, phys in zip(logical, dres)
                 ]))
-            parts.append(_IcebergFilePartition(
-                abs_path,
+            parts.append(FilePartition(
+                path,
                 columns,
-                [self._t._abs(p) for p in fl.get("deletes", ())],
-                eq_specs,
+                pos_deletes=[
+                    (self._t._abs(p), "file_path")
+                    for p in fl.get("deletes", ())
+                ],
+                eq_deletes=eq_deletes,
             ))
         return parts
-
-    # -- row reading (executor-side) ----------------------------------------
-
-    def read(self, partition: _IcebergFilePartition):
-        if not partition.abs_path:
-            return iter(())
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(partition.abs_path)
-        n = tbl.num_rows
-        names, cols = [], []
-        for (kind, spec), f in zip(
-            partition.columns, self.schema.fields
-        ):
-            names.append(f.name)
-            if kind == "part":
-                cols.append([spec] * n)
-            elif spec in tbl.column_names:
-                cols.append(tbl.column(spec).to_pylist())
-            else:
-                cols.append([None] * n)
-        my_base = os.path.basename(partition.abs_path)
-        dead: set[int] = set()
-        for dp in partition.pos_deletes:
-            dtbl = pq.read_table(
-                dp, columns=["file_path", "pos"]
-            )
-            for fp, pos in zip(
-                dtbl.column("file_path").to_pylist(),
-                dtbl.column("pos").to_pylist(),
-            ):
-                if os.path.basename(fp) == my_base:
-                    dead.add(int(pos))
-        idx_of = {nm: i for i, nm in enumerate(names)}
-        for dp, eq_cols in partition.eq_deletes:
-            # eq_cols: (logical name, delete-file physical name) pairs
-            dtbl = pq.read_table(
-                dp, columns=[phys for _, phys in eq_cols]
-            )
-            gone = set(zip(*(
-                dtbl.column(phys).to_pylist() for _, phys in eq_cols
-            )))
-            ixs = [idx_of[c] for c, _ in eq_cols]
-            for i in range(n):
-                if tuple(cols[j][i] for j in ixs) in gone:
-                    dead.add(i)
-        return (
-            tuple(col[i] for col in cols)
-            for i in range(n)
-            if i not in dead
-        )
 
 
 class IcebergStreamDataSource(DataSource):
@@ -348,7 +265,7 @@ class IcebergStreamDataSource(DataSource):
         )
 
     def streamReader(self, schema):
-        return _IcebergStreamReader(self.options, schema)
+        return _IcebergTail(self.options, schema)
 
 
 def register(spark) -> None:

@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from luxo_rs_spark.sources.readpath import flag
+
 _WORDS = [
     "light", "query", "engine", "index", "hash", "scan", "join",
     "page", "tree", "key", "row", "plan", "sort", "merge",
@@ -159,7 +161,7 @@ class SynthDocsDataSource(DataSource):
         )
 
     def reader(self, schema):
-        if str(self.options.get("pushdown", "")).lower() == "true":
+        if flag(self.options, "pushdown"):
             return _SynthDocsPushdownReader(self.options)
         return _SynthDocsReader(self.options)
 

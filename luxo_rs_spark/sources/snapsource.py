@@ -1,35 +1,38 @@
 """SnapTable as a Spark DataSource ("snaptable" format): the snapshot
 table format (sources/snaptable.py) plugged into Spark's own reader
-protocols via the Spark 4 ``pyspark.sql.datasource`` API — so a user
+protocols via the Spark 4 ``pyspark.sql.datasource`` API, so a user
 can say ``spark.read.format("snaptable").load(root)`` or
 ``spark.readStream.format("snaptable")`` instead of going through the
 SnapTable class.
 
-Three integration points:
-
-- **Batch**: one InputPartition per manifest data file; rows are read
-  executor-side with pyarrow. Time travel via ``.option("version", N)``.
+- **Batch**: one partition per manifest data file, read on the
+  executor by the shared row reader (sources/readpath.py). Time travel
+  via ``.option("version", N)``.
 - **Filter pushdown** (opt-in ``.option("pushdown", "true")``, same
-  convention as synthdocs — defining pushFilters forces
+  convention as synthdocs; defining pushFilters forces
   ``spark.sql.python.filterPushdown.enabled``): range/equality
-  predicates on stat columns prune FILE PARTITIONS against the
-  manifest min/max before Spark schedules them — manifest-level data
-  skipping expressed through Spark's own pushdown protocol. Filters
-  are also returned unhandled so Spark re-applies them row-level
-  (pruning is an optimization, never a semantics change).
-- **Streaming**: a micro-batch tail of the table where the OFFSET IS
-  THE SNAPSHOT VERSION — each batch emits the rows of files ADDED
-  between the committed version and the current latest (the Delta
-  streaming-source shape; rewrite outputs surface like Delta's
-  ignoreChanges). Offsets replay deterministically because manifests
-  are retained. The Simple reader reads driver-side (fine at
-  micro-batch granularity; the partition-parallel variant would ship
-  one file per InputPartition exactly like the batch reader).
+  predicates on stat columns prune FILE PARTITIONS through
+  ``SnapTable._prune_range`` before Spark schedules them. Filters are
+  also returned unhandled so Spark re-applies them row-level (pruning
+  is an optimization, never a semantics change).
+- **Streaming tail**: the offset ``{"v": n}`` is the snapshot version;
+  a micro-batch delivers the rows of files ADDED between two versions
+  (rewrite outputs surface like Delta's ignoreChanges), one partition
+  per file. ``.option("skipChangeCommits", "true")`` delivers only the
+  files of create/append commits.
+- **Change feed**: ``.option("readChangeFeed", "true")`` streams the
+  row-level diff between versions (``readpath.ChangeFeedReader``).
+
+This module holds only what is SnapTable-specific: which commits a
+batch delivers, and how a manifest resolves a file's columns (column
+mapping) and deletes (its deletion-vector side-file, a position-delete
+file keyed by file name). Manifests are read through
+``SnapTable(None, root)``, whose manifest methods never touch the
+session.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -38,213 +41,58 @@ from pyspark.sql.datasource import (
     EqualTo,
     GreaterThan,
     GreaterThanOrEqual,
-    InputPartition,
     LessThan,
     LessThanOrEqual,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
 
-_SNAP_DIR = "_snapshots"
+from luxo_rs_spark.sources.readpath import (
+    ChangeFeedReader,
+    FilePartition,
+    TailReader,
+    file_rows,
+    flag,
+)
+from luxo_rs_spark.sources.snaptable import SnapTable
 
 
-def _versions(root: str) -> list[int]:
-    snap = os.path.join(root, _SNAP_DIR)
-    if not os.path.isdir(snap):
-        return []
-    return sorted(
-        int(f[1:9])
-        for f in os.listdir(snap)
-        if f.startswith("v") and f.endswith(".json")
+def _columns(m: dict, names: list[str]) -> list[tuple]:
+    """Column specs of the schema fields ``names`` under manifest
+    ``m``: data files store PHYSICAL names (column mapping), and legacy
+    manifests without field records store logical ones. Reads
+    ``m["fields"]`` directly: ``SnapTable._fields`` parses a legacy
+    manifest's DDL through the JVM, which a Python worker lacks."""
+    phys = {f["name"]: f["physical"] for f in m.get("fields", ())}
+    return [("col", phys.get(n, n)) for n in names]
+
+
+def _partition(t: SnapTable, columns: list[tuple], path: str,
+               dv: str) -> FilePartition:
+    """One data file; its deletion vector ("" for none) is a
+    position-delete file with ``fname``/``pos`` columns."""
+    return FilePartition(
+        os.path.join(t.root, path),
+        columns,
+        pos_deletes=[(os.path.join(t.root, dv), "fname")] if dv else (),
     )
-
-
-def _manifest(root: str, version: int | None = None) -> dict:
-    vs = _versions(root)
-    v = version if version is not None else (vs[-1] if vs else 0)
-    if v <= 0:
-        raise FileNotFoundError(f"snaptable {root}: no snapshot v{v}")
-    with open(os.path.join(root, _SNAP_DIR, f"v{v:08d}.json")) as f:
-        return json.load(f)
-
-
-def _entry_paths(root: str, m: dict) -> list[str]:
-    """Data-file paths of a manifest — reads just the ``path`` column
-    of the columnar checkpoint when the manifest is checkpointed."""
-    if "files_ckpt" not in m:
-        return [e["path"] for e in m["files"]]
-    import pyarrow.parquet as pq
-
-    return (
-        pq.read_table(
-            os.path.join(root, m["files_ckpt"]), columns=["path"]
-        )
-        .column("path")
-        .to_pylist()
-    )
-
-
-def _prune_paths(root: str, m: dict, bounds: dict) -> list[str]:
-    """File paths surviving {col: [lo, hi]} range bounds (either end
-    may be None). Inline manifests walk the dict list; columnar ones
-    compare the checkpoint's typed min__/max__ arrays — no JSON parse
-    however many files the table has (mirrors SnapTable._prune_range,
-    restated here because the DataSource face must stay importable
-    without the SnapTable class)."""
-    if "files_ckpt" not in m:
-        keep = []
-        for e in m["files"]:
-            ok = True
-            for col, (lo, hi) in bounds.items():
-                st = e["stats"].get(col)
-                if st is None or st["min"] is None:
-                    continue  # no stats: cannot prune
-                if (hi is not None and st["min"] > hi) or (
-                    lo is not None and st["max"] < lo
-                ):
-                    ok = False
-                    break
-            if ok:
-                keep.append(e["path"])
-        return keep
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(os.path.join(root, m["files_ckpt"]))
-    names = set(tbl.column_names)
-    mask = None
-    for col, (lo, hi) in bounds.items():
-        if f"min__{col}" not in names:
-            continue
-        mn, mx = tbl.column(f"min__{col}"), tbl.column(f"max__{col}")
-        ok = pc.is_null(mn)
-        inb = None
-        if hi is not None:
-            inb = pc.less_equal(mn, hi)
-        if lo is not None:
-            ge = pc.greater_equal(mx, lo)
-            inb = ge if inb is None else pc.and_(inb, ge)
-        if inb is not None:
-            ok = pc.or_kleene(ok, inb)
-        ok = pc.fill_null(ok, False)
-        mask = ok if mask is None else pc.and_(mask, ok)
-    if mask is None:
-        return tbl.column("path").to_pylist()
-    return tbl.filter(mask).column("path").to_pylist()
-
-
-def _entries(root: str, m: dict) -> list[dict]:
-    """Entry dicts (path/rows/stats) for any manifest representation."""
-    if "files_ckpt" not in m:
-        return m["files"]
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(os.path.join(root, m["files_ckpt"]))
-    paths = tbl.column("path").to_pylist()
-    rows = tbl.column("rows").to_pylist()
-    stats = tbl.column("stats_json").to_pylist()
-    return [
-        {"path": p, "rows": r, "stats": json.loads(s)}
-        for p, r, s in zip(paths, rows, stats)
-    ]
-
-
-def _dv_map(root: str, m: dict) -> dict:
-    """{data path -> deletion-vector rel path} (see snaptable.py)."""
-    if "files_ckpt" not in m:
-        return {e["path"]: e["dv"] for e in m["files"] if e.get("dv")}
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(os.path.join(root, m["files_ckpt"]))
-    if "dv" not in tbl.column_names:
-        return {}
-    return {
-        p: d
-        for p, d in zip(
-            tbl.column("path").to_pylist(), tbl.column("dv").to_pylist()
-        )
-        if d
-    }
-
-
-def _dv_positions(root: str, dv_rel: str, fname: str) -> set:
-    """Deleted row positions recorded for one data file."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(os.path.join(root, dv_rel))
-    hit = tbl.filter(pc.equal(tbl.column("fname"), fname))
-    return set(hit.column("pos").to_pylist())
-
-
-def _phys_names(m: dict, names: list[str]) -> list[str]:
-    """Logical -> physical column translation (column mapping): data
-    files store PHYSICAL names; manifests carry the mapping."""
-    mapping = {f["name"]: f["physical"] for f in m.get("fields", [])}
-    return [mapping.get(n, n) for n in names]
-
-
-def _file_rows(
-    root: str, rel_path: str, field_names: list[str],
-    dv_rel: str | None = None,
-):
-    """Read one data file (pyarrow, executor- or driver-side) and yield
-    tuples aligned to the table schema — absent columns (older files
-    under add-column evolution) fill with None; rows whose position is
-    recorded in the file's deletion vector are skipped (merge-on-read)."""
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(os.path.join(root, rel_path))
-    dead = (
-        _dv_positions(root, dv_rel, os.path.basename(rel_path))
-        if dv_rel
-        else None
-    )
-    cols = {}
-    n = tbl.num_rows
-    for name in field_names:
-        if name in tbl.column_names:
-            cols[name] = tbl.column(name).to_pylist()
-        else:
-            cols[name] = [None] * n
-    for i in range(n):
-        if dead and i in dead:
-            continue
-        yield tuple(cols[name][i] for name in field_names)
-
-
-class _FilePartition(InputPartition):
-    def __init__(self, rel_path: str, dv_rel: str | None = None):
-        self.rel_path = rel_path
-        self.dv_rel = dv_rel
 
 
 class _SnapTableReader(DataSourceReader):
     def __init__(self, options, schema: StructType):
-        self.root = options["path"]
-        self.version = (
-            int(options["version"]) if options.get("version") else None
-        )
-        self.field_names = _phys_names(
-            _manifest(self.root, self.version),
-            [f.name for f in schema.fields],
-        )
-        self.manifest = _manifest(self.root, self.version)
-        self._entry_list = _entry_paths(self.root, self.manifest)
-        self._dv = _dv_map(self.root, self.manifest)
+        self.t = SnapTable(None, options["path"])
+        v = options.get("version")
+        self.m = self.t.manifest(int(v) if v else None)
+        self.names = schema.fieldNames()
+        self.columns = _columns(self.m, self.names)
+        self.keys = self.t._path_dv(self.m)
 
     def partitions(self):
         return [
-            _FilePartition(p, self._dv.get(p)) for p in self._entry_list
-        ] or [_FilePartition("")]
+            _partition(self.t, self.columns, p, dv) for p, dv in self.keys
+        ] or [FilePartition("")]
 
-    def read(self, partition: _FilePartition):
-        if not partition.rel_path:
-            return iter(())
-        return _file_rows(
-            self.root, partition.rel_path, self.field_names,
-            getattr(partition, "dv_rel", None),
-        )
+    def read(self, partition: FilePartition):
+        return file_rows(partition)
 
 
 class _SnapTablePushdownReader(_SnapTableReader):
@@ -272,208 +120,124 @@ class _SnapTablePushdownReader(_SnapTableReader):
             yield f  # always re-applied by Spark: pruning only
 
         # filters arrive on LOGICAL names; stats are keyed PHYSICAL
-        # (column mapping) — translate, dropping bounds on columns the
-        # manifest cannot resolve (no pruning, never wrong pruning)
-        mapping = {
-            fld["name"]: fld["physical"]
-            for fld in self.manifest.get("fields", [])
-        }
-        bounds = {
-            mapping.get(col, col): b for col, b in bounds.items()
-        }
-        self._entry_list = _prune_paths(self.root, self.manifest, bounds)
-
-
-class _SnapTableStreamReader(SimpleDataSourceStreamReader):
-    """Tail the table: offset = snapshot version; a batch is the rows
-    of files ADDED between two versions. With
-    ``.option("skipChangeCommits", "true")`` (the Delta option of the
-    same name) rewrite commits — compact/OPTIMIZE/delete/merge — are
-    SKIPPED instead of re-delivered: the batch walks version-by-version
-    and emits only files added by create/append commits, so a
-    mid-stream OPTIMIZE neither duplicates rows nor stalls the tail and
-    every appended row is delivered exactly once."""
-
-    def __init__(self, options, schema: StructType):
-        self.root = options["path"]
-        self.field_names = [f.name for f in schema.fields]
-        self.skip_change = (
-            str(options.get("skipchangecommits", "")).lower() == "true"
-        )
-
-    def initialOffset(self):
-        return {"v": 0}
-
-    def _added_rows(self, v_from: int, v_to: int):
-        if v_to <= v_from:
-            return iter(())
-        rows = []  # materialized: Spark copy.copy()s the iterator,
-        # so it must be list-backed (same as the synthdocs reader)
-        if not self.skip_change:
-            old = (
-                set(_entry_paths(self.root, _manifest(self.root, v_from)))
-                if v_from > 0
-                else set()
+        # (column mapping); a file survives only if every column's
+        # bounds admit it, as in SnapTable.scan_where
+        phys = {n: spec for n, (_, spec) in zip(self.names, self.columns)}
+        keep = None
+        for col, (lo, hi) in bounds.items():
+            paths, _ = self.t._prune_range(
+                self.m, phys.get(col, col), lo, hi
             )
-            m_to = _manifest(self.root, v_to)
-            new = _entry_paths(self.root, m_to)
-            names = _phys_names(m_to, self.field_names)
-            for p in new:
-                if p not in old:
-                    rows.extend(_file_rows(self.root, p, names))
-            return iter(rows)
-        prev_paths = (
-            set(_entry_paths(self.root, _manifest(self.root, v_from)))
-            if v_from > 0
-            else set()
-        )
-        for v in range(max(v_from, 0) + 1, v_to + 1):
-            m = _manifest(self.root, v)
-            cur_paths = set(_entry_paths(self.root, m))
-            if m["operation"] in ("create", "append"):
-                names = _phys_names(m, self.field_names)
-                for p in _entry_paths(self.root, m):
-                    if p not in prev_paths:
-                        rows.extend(_file_rows(self.root, p, names))
-            prev_paths = cur_paths
-        return iter(rows)
-
-    def read(self, start):
-        vs = _versions(self.root)
-        cur = vs[-1] if vs else 0
-        return self._added_rows(start["v"], cur), {"v": cur}
-
-    def readBetweenOffsets(self, start, end):
-        # deterministic replay: manifests are retained, so the same
-        # version pair always yields the same added-file rows
-        return self._added_rows(start["v"], end["v"])
+            keep = set(paths) if keep is None else keep & set(paths)
+        if keep is not None:
+            self.keys = [k for k in self.keys if k[0] in keep]
 
 
-class _SnapTableCDFStreamReader(SimpleDataSourceStreamReader):
-    """Change-feed tail (``.option("readChangeFeed", "true")`` — the
-    Delta CDF shape): each micro-batch is the ROW-LEVEL diff between
-    the committed version and the current latest, every row tagged
-    ``change_type`` 'insert' or 'delete' (a CoW update surfaces as the
-    delete+insert pair). The diff is a multiset subtraction over only
-    the added/removed files — immutable common files cancel unread."""
+class _SnapTableTail(TailReader):
+    """Tail the table: offset ``{"v": n}`` = snapshot version; a batch
+    is the rows of files ADDED between two versions. With
+    ``.option("skipChangeCommits", "true")`` (the Delta option of the
+    same name) rewrite commits (compact/OPTIMIZE/delete/merge) are
+    SKIPPED instead of re-delivered: the batch walks version by version
+    and delivers only files added by create/append commits, so a
+    mid-stream OPTIMIZE neither duplicates rows nor stalls the tail and
+    every appended row is delivered exactly once. Delivered files are
+    read with their newest deletion vector in the batch and resolve
+    columns at the batch's end version."""
 
     def __init__(self, options, schema: StructType):
-        self.root = options["path"]
-        # schema = (change_type, *table columns)
-        self.field_names = [f.name for f in schema.fields[1:]]
+        self.t = SnapTable(None, options["path"])
+        self.names = schema.fieldNames()
+        self.skip_change = flag(options, "skipchangecommits")
 
-    def initialOffset(self):
+    def initialOffset(self) -> dict:
         return {"v": 0}
 
-    @staticmethod
-    def _freeze(v):
-        """Hashable stand-in for a row value: pyarrow's to_pylist()
-        yields Python lists for array columns and dicts for maps —
-        unhashable, so they cannot key the multiset Counter directly.
-        Tag-wrapped so thaw is unambiguous (a genuine 2-tuple value in
-        the data can never collide with the tags)."""
-        if isinstance(v, list):
-            return ("__snap_list__", tuple(
-                _SnapTableCDFStreamReader._freeze(x) for x in v
-            ))
-        if isinstance(v, dict):
-            return ("__snap_map__", tuple(sorted(
-                (k, _SnapTableCDFStreamReader._freeze(x))
-                for k, x in v.items()
-            )))
-        if isinstance(v, tuple):
-            # pyarrow renders MAP cells as list-of-(key, value) tuples;
-            # a tuple may therefore nest further lists — recurse.
-            return tuple(_SnapTableCDFStreamReader._freeze(x) for x in v)
-        return v
+    def latestOffset(self) -> dict:
+        return {"v": self.t.latest_version()}
 
-    @staticmethod
-    def _thaw(v):
-        if isinstance(v, tuple) and len(v) == 2 and v[0] == "__snap_list__":
-            return [_SnapTableCDFStreamReader._thaw(x) for x in v[1]]
-        if isinstance(v, tuple) and len(v) == 2 and v[0] == "__snap_map__":
-            return {k: _SnapTableCDFStreamReader._thaw(x) for k, x in v[1]}
-        if isinstance(v, tuple):
-            return tuple(_SnapTableCDFStreamReader._thaw(x) for x in v)
-        return v
-
-    def _diff_rows(self, v_from: int, v_to: int):
-        from collections import Counter
-
+    def plan(self, start: dict, end: dict) -> list[FilePartition]:
+        v_from, v_to = int(start["v"]), int(end["v"])
         if v_to <= v_from:
-            return iter([])
-        m_to = _manifest(self.root, v_to)
-        new_entries = _entry_paths(self.root, m_to)
-        names = _phys_names(m_to, self.field_names)
-        old_entries = (
-            _entry_paths(self.root, _manifest(self.root, v_from))
-            if v_from > 0
-            else []
-        )
-        new_paths = set(new_entries)
-        old_paths = set(old_entries)
-        freeze, thaw = self._freeze, self._thaw
+            return []
+        t = self.t
+        prev = set(t._paths(t.manifest(v_from))) if v_from > 0 else set()
+        m_to = t.manifest(v_to)
+        if not self.skip_change:
+            keys = [k for k in t._path_dv(m_to) if k[0] not in prev]
+        else:
+            dv: dict[str, str] = {}  # delivered path -> newest DV
+            for v in range(v_from + 1, v_to + 1):
+                m = m_to if v == v_to else t.manifest(v)
+                cur = t._path_dv(m)
+                added = m["operation"] in ("create", "append")
+                for p, d in cur:
+                    if p in dv or (added and p not in prev):
+                        dv[p] = d
+                prev = {p for p, _ in cur}
+            keys = list(dv.items())
+        columns = _columns(m_to, self.names)
+        return [_partition(t, columns, p, d) for p, d in keys]
 
-        def rows_of(entries, skip):
-            c: Counter = Counter()
-            for p in entries:
-                if p not in skip:
-                    for r in _file_rows(self.root, p, names):
-                        c[tuple(freeze(v) for v in r)] += 1
-            return c
 
-        added = rows_of(new_entries, old_paths)
-        removed = rows_of(old_entries, new_paths)
-        out = []
-        for r, n in (added - removed).items():
-            out.extend([("insert",) + tuple(thaw(v) for v in r)] * n)
-        for r, n in (removed - added).items():
-            out.extend([("delete",) + tuple(thaw(v) for v in r)] * n)
-        return iter(out)
+class _SnapTableChangeFeed(ChangeFeedReader):
+    """Change feed over SnapTable versions; a file's delete identity is
+    its deletion-vector side-file."""
 
-    def read(self, start):
-        vs = _versions(self.root)
-        cur = vs[-1] if vs else 0
-        return self._diff_rows(start["v"], cur), {"v": cur}
+    def __init__(self, options, schema: StructType):
+        self.t = SnapTable(None, options["path"])
+        # schema = (change_type, *table columns)
+        self.names = schema.fieldNames()[1:]
 
-    def readBetweenOffsets(self, start, end):
-        return self._diff_rows(start["v"], end["v"])
+    def initialOffset(self) -> dict:
+        return {"v": 0}
+
+    def latest(self) -> int:
+        return self.t.latest_version()
+
+    def files(self, v: int):
+        if v <= 0:
+            return None, {}
+        m = self.t.manifest(v)
+        return _columns(m, self.names), {k: k for k in self.t._path_dv(m)}
+
+    def partition(self, columns, key) -> FilePartition:
+        return _partition(self.t, columns, *key)
 
 
 class SnapTableDataSource(DataSource):
     """spark.read.format("snaptable").load(root)
     [.option("version", N)] [.option("pushdown", "true")];
-    spark.readStream.format("snaptable").load(root)"""
+    spark.readStream.format("snaptable").load(root)
+    [.option("skipChangeCommits", "true")]
+    [.option("readChangeFeed", "true")]"""
 
     @classmethod
     def name(cls):
         return "snaptable"
 
-    def _cdf(self) -> bool:
-        return str(
-            self.options.get("readchangefeed", "")
-        ).lower() == "true"
-
     def schema(self):
-        m = _manifest(
-            self.options["path"],
-            int(self.options["version"])
-            if self.options.get("version")
-            else None,
+        v = self.options.get("version")
+        m = SnapTable(None, self.options["path"]).manifest(
+            int(v) if v else None
         )
-        if self._cdf():
+        if flag(self.options, "readchangefeed"):
             return "change_type string, " + m["schema"]
         return m["schema"]
 
     def reader(self, schema):
-        if str(self.options.get("pushdown", "")).lower() == "true":
+        if flag(self.options, "pushdown"):
             return _SnapTablePushdownReader(self.options, schema)
         return _SnapTableReader(self.options, schema)
 
+    def streamReader(self, schema):
+        if flag(self.options, "readchangefeed"):
+            # NOT_IMPLEMENTED routes Spark to simpleStreamReader
+            return super().streamReader(schema)
+        return _SnapTableTail(self.options, schema)
+
     def simpleStreamReader(self, schema):
-        if self._cdf():
-            return _SnapTableCDFStreamReader(self.options, schema)
-        return _SnapTableStreamReader(self.options, schema)
+        return _SnapTableChangeFeed(self.options, schema)
 
 
 def register(spark) -> None:

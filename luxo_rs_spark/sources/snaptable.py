@@ -435,17 +435,19 @@ class SnapTable:
         return self._read_files(m, self._paths(m))
 
     def _prune_range(self, m: dict, col: str, lo, hi):
-        """File-level range pruning -> (keep_paths, info). Inline
-        manifests walk the dict list; columnar ones compare the typed
-        ``min__/max__`` checkpoint arrays — no JSON is parsed however
-        many files the table has."""
+        """File-level range pruning -> (keep_paths, info). Either end
+        may be None (open). Inline manifests walk the dict list;
+        columnar ones compare the typed ``min__/max__`` checkpoint
+        arrays — no JSON is parsed however many files the table has."""
         if "files_ckpt" not in m:
             keep, skipped_rows = [], 0
             for e in m["files"]:
                 st = e["stats"].get(col)
                 if st is None or st["min"] is None:  # no stats -> scan
                     keep.append(e)
-                elif st["max"] >= lo and st["min"] <= hi:
+                elif (lo is None or st["max"] >= lo) and (
+                    hi is None or st["min"] <= hi
+                ):
                     keep.append(e)
                 else:
                     skipped_rows += e["rows"]
@@ -467,10 +469,12 @@ class SnapTable:
         mn, mx = tbl.column(f"min__{col}"), tbl.column(f"max__{col}")
         # vectorized mask; only SURVIVING paths are materialized to
         # Python — the pruning pass itself never leaves arrow arrays
-        keep_mask = pc.or_kleene(
-            pc.is_null(mn),
-            pc.and_(pc.greater_equal(mx, lo), pc.less_equal(mn, hi)),
-        )
+        in_range = pc.is_valid(mn)
+        if lo is not None:
+            in_range = pc.and_(in_range, pc.greater_equal(mx, lo))
+        if hi is not None:
+            in_range = pc.and_(in_range, pc.less_equal(mn, hi))
+        keep_mask = pc.or_kleene(pc.is_null(mn), in_range)
         kept = tbl.filter(keep_mask)
         total_rows = pc.sum(tbl.column("rows")).as_py() or 0
         kept_rows = pc.sum(kept.column("rows")).as_py() or 0

@@ -623,6 +623,22 @@ def test_snaptable_datasource_change_feed(spark, root):
         )
         cur = set(r["k"] for r in t.read().collect())
         assert ins - set(r["k"] for r in dels.collect()) == cur
+
+        # a deletion-vector delete surfaces exactly its rows: the file
+        # is listed on both sides of the diff with its two DV states
+        t.delete_where("k", 60, 79, mode="dv")
+        for _ in range(4):
+            run_once()
+            if spark.read.parquet(out).filter(
+                "change_type = 'delete'"
+            ).count() >= 40:
+                break
+        feed = spark.read.parquet(out)
+        dels = feed.filter("change_type = 'delete'")
+        assert sorted(r["k"] for r in dels.collect()) == (
+            list(range(20, 40)) + list(range(60, 80))
+        )
+        assert feed.filter("change_type = 'insert'").count() == 100
     finally:
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -742,9 +758,9 @@ def test_explicit_version_zero_raises(spark, root):
 
 def test_change_feed_handles_array_and_map_columns(spark, root):
     """pyarrow to_pylist() yields lists/dicts for complex columns —
-    unhashable; the CDF reader freezes them for the diff multiset and
-    thaws on emit."""
-    from luxo_rs_spark.sources.snapsource import _SnapTableCDFStreamReader
+    unhashable; the shared change feed (readpath.ChangeFeedReader)
+    freezes them for the diff multiset and thaws on emit."""
+    from luxo_rs_spark.sources.snapsource import SnapTableDataSource
 
     t = SnapTable(spark, root)
     df = spark.createDataFrame(
@@ -759,7 +775,7 @@ def test_change_feed_handles_array_and_map_columns(spark, root):
     schema = T.StructType.fromDDL(
         "change_type string, " + t.manifest()["schema"]
     )
-    rdr = _SnapTableCDFStreamReader({"path": root}, schema)
+    rdr = SnapTableDataSource({"path": root}).simpleStreamReader(schema)
     rows = list(rdr._diff_rows(1, 2))
     dels = [r for r in rows if r[0] == "delete"]
     assert sorted(r[1] for r in dels) == [0, 1, 2, 3, 4]
@@ -789,6 +805,9 @@ def test_columnar_checkpoint_lifecycle_matches_inline(spark, root):
     df, info = t.scan("k", 120, 260)
     assert info == {"files_total": 3, "files_scanned": 2, "rows_skipped": 100}
     assert len(df.inputFiles()) == 2 and df.count() == 130
+    # either end may be open (the DataSource pushdown's one-sided bounds)
+    assert len(t._prune_range(m, "k", 120, None)[0]) == 2
+    assert len(t._prune_range(m, "k", None, 99)[0]) == 1
 
     # append carries the checkpoint table through (still columnar)
     t.append(_mk(spark, "t", range(250, 300)), bucket_col="b")
@@ -1220,6 +1239,45 @@ def test_streaming_tail_survives_midstream_optimize(spark, root):
         assert sorted(
             r["k"] for r in spark.read.parquet(out).collect()
         ) == list(range(180))
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+@pytest.mark.parametrize("skip_change", ["false", "true"])
+def test_new_stream_over_dv_deleted_table_delivers_live_rows(
+    spark, root, skip_change
+):
+    """A stream started after a deletion-vector delete delivers exactly
+    the table's live rows, plainly and under skipChangeCommits: the
+    streamed files are read with their vectors."""
+    import tempfile
+
+    from luxo_rs_spark.sources.snapsource import register
+
+    register(spark)
+    t = SnapTable(spark, root)
+    t.create(_mk(spark, "t", range(100)), stat_cols=["k"], bucket_col="b")
+    t.delete_where("k", 20, 39, mode="dv")
+
+    out = tempfile.mkdtemp(prefix="snapdv_out_")
+    ckpt = tempfile.mkdtemp(prefix="snapdv_ck_")
+    try:
+        q = (
+            spark.readStream.format("snaptable")
+            .option("skipChangeCommits", skip_change)
+            .load(root)
+            .writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        got = spark.read.parquet(out).orderBy("k").collect()
+        assert len(got) == 80
+        assert got == t.read().orderBy("k").collect()
     finally:
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)

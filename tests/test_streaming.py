@@ -133,6 +133,16 @@ def test_stream_dedup_bounded_state(spark, stream_dir):
     assert len(got) == n_keys
 
 
+def test_spread_returns_streaming_frame_unprobed(spark):
+    """spread() on a streaming frame is a no-op: probing its partition
+    count would raise (a streaming plan has no RDD outside a query)."""
+    from luxo_rs_spark.functions.spread import spread
+
+    sdf = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    assert spread(sdf) is sdf
+    assert spread(sdf, "value") is sdf
+
+
 @pytest.mark.slow
 def test_stream_dedup_within_watermark_collapses_retries(spark):
     """dropDuplicatesWithinWatermark (§2.2-I): an at-least-once producer

@@ -33,6 +33,9 @@ def median(xs):
 
 
 def fit_alpha(ns, ys):
+    """Log-log slope of time against size; None below two sizes."""
+    if len(set(ns)) < 2:
+        return None
     lx = [math.log(n) for n in ns]
     ly = [math.log(max(y, 1e-6)) for y in ys]
     n = len(ns)
@@ -183,12 +186,9 @@ def main() -> None:
         # the LAST commit must be O(commit), flat in table size — the
         # walk opens only the (start, end] jsons; the bootstrap batch
         # (first offset) is the one O(table) snapshot
-        from luxo_rs_spark.sources.deltastream import (
-            _DeltaStreamReader,
-        )
-        sr = _DeltaStreamReader(
-            {"path": d_root}, t.snapshot()["schema"]
-        )
+        from luxo_rs_spark.sources.deltastream import _DeltaTail
+
+        sr = _DeltaTail({"path": d_root}, t.snapshot()["schema"])
         last = t.latest_version()
         sec_stream_incr = timed(lambda: sr._batch_adds(
             {"v": last - 1, "snapshot": False}, {"v": last}
